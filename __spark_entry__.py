@@ -7950,7 +7950,7 @@ def q_streaming_delta_source(spark: SparkSession, sf: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _drain_stream(q)
 
     sink_a, ckpt_a = os.path.join(base, "a"), os.path.join(base, "ckpt_a")
     sink_b, ckpt_b = os.path.join(base, "b"), os.path.join(base, "ckpt_b")
@@ -8276,7 +8276,7 @@ def q_streaming_iceberg_source(spark: SparkSession, sf: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _drain_stream(q)
 
     sink_a, ckpt_a = os.path.join(base, "a"), os.path.join(base, "ckpt_a")
     sink_b, ckpt_b = os.path.join(base, "b"), os.path.join(base, "ckpt_b")

@@ -20,11 +20,15 @@ from __future__ import annotations
 import os
 import re
 import shutil
-from fnmatch import fnmatch
 from typing import IO
 from urllib.parse import urlparse
 
 _URI_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
+
+# a scheme prefix (``file:``, ``file://``, ``s3://``, ...) or a missing
+# leading slash — what path normalization replaces with one ``/``
+_NORM_PATTERN = r"^(?:[a-zA-Z][a-zA-Z0-9+.\-]*:/+|/?)"
+_NORM_RE = re.compile(_NORM_PATTERN)
 
 # scheme -> explicitly mounted pyarrow FileSystem. Lets tests mount
 # pyarrow.fs._MockFileSystem() (or any custom backend) under a scheme
@@ -243,28 +247,24 @@ def move(src: str, dst: str) -> None:
     remove(src)
 
 
-def glob_files(pattern: str) -> list[str]:
-    """Sorted full paths matching a glob whose LAST component only is a
-    pattern (the shape every lakehouse call site uses:
-    ``<dir>/part-*.parquet``)."""
-    fs, p = _split(pattern)
-    if fs is None:
-        import glob as _glob
-
-        hits = sorted(_glob.glob(p))
-        if pattern.startswith("file://"):
-            return [f"file://{h}" for h in hits]
-        return hits
-    head, _, tail = pattern.rpartition("/")
-    try:
-        names = listdir(head)
-    except FileNotFoundError:
-        return []
-    return [f"{head}/{n}" for n in sorted(names) if fnmatch(n, tail)]
-
-
 def is_uri(path: str) -> bool:
     return bool(_URI_RE.match(path))
+
+
+def norm_path(path: str) -> str:
+    """Scheme-insensitive absolute path: ``file:/a``, ``file:///a``,
+    ``/a`` and ``a`` all normalize to ``/a``, ``s3://b/k`` to
+    ``/b/k``. Join keys built from table metadata must match Spark's
+    ``_metadata.file_path``, which is a URI."""
+    return _NORM_RE.sub("/", path, count=1)
+
+
+def norm_path_col(c):
+    """Column twin of :func:`norm_path` — the same pattern, evaluated
+    by Spark."""
+    from pyspark.sql import functions as F
+
+    return F.regexp_replace(c, _NORM_PATTERN, "/")
 
 
 def walk_files(path: str) -> list[str]:

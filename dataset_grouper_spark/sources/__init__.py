@@ -2,8 +2,8 @@
 
 The reference reads TFDS datasets via Beam (tfds_pipelines.py:58-60)
 and TFRecord shards via tf.data (data_loaders.py:116-122). Natively we
-read columnar tables; TFRecord is an optional compat path gated behind
-an import-try (the spark-tensorflow connector is not bundled).
+read columnar tables; TFRecord interop is the pure-Python codec in
+``compat/`` (no spark-tensorflow connector needed).
 
 Beyond-reference format support (all jar-free, see the submodules):
 ``sources.delta`` (Delta Lake read/append/change-feed),
@@ -94,37 +94,10 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
-def read_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: read_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql() queries."""
-    for t in TABLES:
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def read_binary_files(spark: SparkSession, path_glob: str) -> DataFrame:
     """Multimodal ingestion: opaque binary blobs + metadata columns
     (path, modificationTime, length, content) — SURVEY §2.8."""
     return spark.read.format("binaryFile").load(path_glob)
-
-
-def read_tfrecord(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """Compat read of TFRecord files — requires the external
-    spark-tensorflow-connector package; gated so the core engine has no
-    TF dependency."""
-    try:
-        reader = spark.read.format("tfrecord")
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.load(path)
-    except Exception as exc:  # pragma: no cover - connector not bundled
-        raise NotImplementedError(
-            "TFRecord compat read requires spark-tensorflow-connector on "
-            "the classpath; the native engine uses Parquet layouts "
-            "(see sinks/)."
-        ) from exc
 
 
 def table_format(path: str) -> str:

@@ -43,7 +43,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -211,22 +210,6 @@ def _replay(spark: SparkSession | None, table_path: str, version: int):
 _DV_BROADCAST_ROWS = 1_000_000
 
 
-def _norm_path(c):
-    """Scheme-insensitive path: ``file:/a``, ``file:///a`` and ``/a``
-    all normalize to ``/a`` (``_metadata.file_path`` is a URI; the
-    log's add paths are table-relative)."""
-    return F.regexp_replace(c, r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/+", "/")
-
-
-_SCHEME_PREFIX = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/+")
-
-
-def _norm_abs(path: str) -> str:
-    """Python-side twin of :func:`_norm_path` — join keys built from a
-    URI table location must match the normalized ``_metadata.file_path``."""
-    return _SCHEME_PREFIX.sub("/", path)
-
-
 def _resolve_dv_path(table_path: str, storage: str, payload: str) -> str:
     """'u': ``{prefix}{20-char Z85 uuid}`` ->
     ``<table>/<prefix>/deletion_vector_<uuid>.bin``; 'p': absolute."""
@@ -269,7 +252,7 @@ def _dv_positions_frame(
             total = None
         rows.append(
             (
-                _norm_abs(abs_path),
+                _fs.norm_path(abs_path),
                 desc["storageType"],
                 desc["pathOrInlineDv"],
                 int(desc.get("offset") or 0),
@@ -675,7 +658,7 @@ def read_delta(
             return df
         return df.withColumns(
             {
-                "__fp": _norm_path(F.col("_metadata.file_path")),
+                "__fp": _fs.norm_path_col(F.col("_metadata.file_path")),
                 "__pos": F.col("_metadata.row_index"),
             }
         )
@@ -763,7 +746,7 @@ def read_delta(
         fmap = local_frame(spark, 
             [
                 (
-                    _norm_abs(os.path.join(table_abs, rel)),
+                    _fs.norm_path(os.path.join(table_abs, rel)),
                     int(a["baseRowId"]),
                 )
                 for rel, a in adds.items()
@@ -1114,7 +1097,7 @@ def delta_delete_where(
     def tagged(df: DataFrame) -> DataFrame:
         return df.withColumns(
             {
-                "__fp": _norm_path(F.col("_metadata.file_path")),
+                "__fp": _fs.norm_path_col(F.col("_metadata.file_path")),
                 "__pos": F.col("_metadata.row_index"),
             }
         )
@@ -1180,7 +1163,7 @@ def delta_delete_where(
         dv = a.get("deletionVector") or {}
         map_rows.append(
             (
-                _norm_abs(os.path.join(table_abs, rel)),
+                _fs.norm_path(os.path.join(table_abs, rel)),
                 rel,
                 dv.get("storageType"),
                 dv.get("pathOrInlineDv"),
@@ -1652,7 +1635,7 @@ def _zorder_rewrite_actions(
         for a in b:
             p = os.path.join(table_abs, a["path"])
             all_paths.append(p)
-            fp_bin.append((_norm_abs(p), i))
+            fp_bin.append((_fs.norm_path(p), i))
             if a.get("deletionVector"):
                 dv_adds.append((p, a["deletionVector"]))
     scan = (
@@ -1660,7 +1643,7 @@ def _zorder_rewrite_actions(
         .parquet(*all_paths)
         .withColumns(
             {
-                "__fp": _norm_path(F.col("_metadata.file_path")),
+                "__fp": _fs.norm_path_col(F.col("_metadata.file_path")),
                 "__pos": F.col("_metadata.row_index"),
             }
         )
@@ -1677,7 +1660,7 @@ def _zorder_rewrite_actions(
         bmap = local_frame(spark, 
             [
                 (
-                    _norm_abs(os.path.join(table_abs, a["path"])),
+                    _fs.norm_path(os.path.join(table_abs, a["path"])),
                     int(a["baseRowId"]),
                 )
                 for b in bins
@@ -1909,7 +1892,7 @@ def delta_optimize(
         if tracked or dv_adds:
             scan = scan.withColumns(
                 {
-                    "__fp": _norm_path(F.col("_metadata.file_path")),
+                    "__fp": _fs.norm_path_col(F.col("_metadata.file_path")),
                     "__pos": F.col("_metadata.row_index"),
                 }
             )
@@ -1917,7 +1900,7 @@ def delta_optimize(
             bmap = local_frame(spark, 
                 [
                     (
-                        _norm_abs(os.path.join(table_abs, a["path"])),
+                        _fs.norm_path(os.path.join(table_abs, a["path"])),
                         int(a["baseRowId"]),
                     )
                     for a in picked
@@ -2421,7 +2404,7 @@ def delta_merge(
     table_abs = _table_abs(table_path)
     paths = [os.path.join(table_abs, rel) for rel in adds]
     tag_cols = {
-        "__fp": _norm_path(F.col("_metadata.file_path")),
+        "__fp": _fs.norm_path_col(F.col("_metadata.file_path")),
         "__pos": F.col("_metadata.row_index"),
     }
     def unmap(df: DataFrame) -> DataFrame:
@@ -2535,7 +2518,7 @@ def delta_merge(
         bmap = local_frame(spark, 
             [
                 (
-                    _norm_abs(os.path.join(table_abs, rel)),
+                    _fs.norm_path(os.path.join(table_abs, rel)),
                     int(a["baseRowId"]),
                 )
                 for rel, a in adds.items()
@@ -2573,7 +2556,7 @@ def delta_merge(
         .collect()
     ]
     abs_to_rel = {
-        _norm_abs(os.path.join(table_abs, rel)): rel for rel in adds
+        _fs.norm_path(os.path.join(table_abs, rel)): rel for rel in adds
     }
     touched_rel = sorted(abs_to_rel[p] for p in touched)
 

@@ -497,11 +497,7 @@ def hudi_insert(
             raise ValueError(
                 f"hudi_insert: record key mismatch — table has {want!r}"
             )
-        have_parts = (
-            props.get("hoodie.table.partition.fields", "").split(",")
-            if props.get("hoodie.table.partition.fields")
-            else []
-        )
+        have_parts = _partition_fields(props)
         if have_parts != part_cols:
             raise ValueError(
                 f"hudi_insert: partition fields mismatch — table has "
@@ -529,11 +525,7 @@ def _fid_expr():
     return F.regexp_extract(
         F.element_at(
             F.split(
-                F.regexp_replace(
-                    F.col("_metadata.file_path"),
-                    r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/+",
-                    "/",
-                ),
+                _fs.norm_path_col(F.col("_metadata.file_path")),
                 "/",
             ),
             -1,
@@ -569,11 +561,7 @@ def hudi_upsert(
     (enforced with one cheap count, fails loudly otherwise)."""
     props = _table_props(table_path)
     record_key = props["hoodie.table.recordkey.fields"]
-    part_cols = (
-        props.get("hoodie.table.partition.fields", "").split(",")
-        if props.get("hoodie.table.partition.fields")
-        else []
-    )
+    part_cols = _partition_fields(props)
     if record_key not in df.columns:
         raise ValueError(f"hudi_upsert: record key {record_key!r} not in frame")
     user_cols = list(df.columns)
@@ -944,6 +932,12 @@ def _mor_winners(df: DataFrame, key_cols: list[str],
     )
 
 
+def _partition_fields(props: dict) -> list[str]:
+    """The table's declared partition columns (empty: unpartitioned)."""
+    fields = props.get("hoodie.table.partition.fields")
+    return fields.split(",") if fields else []
+
+
 def _precombine_col(props: dict, user_cols: list[str]) -> str | None:
     """The declared precombine field, when it exists among the user
     columns (a declared-but-absent field degrades to commit-time —
@@ -1150,11 +1144,7 @@ def _read_mor(
 
     props = _table_props(table_path)
     record_key = props["hoodie.table.recordkey.fields"]
-    part_cols = (
-        props.get("hoodie.table.partition.fields", "").split(",")
-        if props.get("hoodie.table.partition.fields")
-        else []
-    )
+    part_cols = _partition_fields(props)
     slices = hudi_file_slices(table_path, as_of)
     if not slices:
         raise ValueError(
@@ -1254,11 +1244,7 @@ def _touched_group_map(spark: SparkSession, table_path: str):
         F.col("_hoodie_record_key").alias("__k"),
         F.element_at(
             F.split(
-                F.regexp_replace(
-                    F.col("_metadata.file_path"),
-                    r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/+",
-                    "/",
-                ),
+                _fs.norm_path_col(F.col("_metadata.file_path")),
                 "/",
             ),
             -1,
@@ -1415,11 +1401,7 @@ def hudi_mor_upsert(
             "with hudi_insert(..., table_type='MERGE_ON_READ'))"
         )
     record_key = props["hoodie.table.recordkey.fields"]
-    part_cols = (
-        props.get("hoodie.table.partition.fields", "").split(",")
-        if props.get("hoodie.table.partition.fields")
-        else []
-    )
+    part_cols = _partition_fields(props)
     if record_key not in df.columns:
         raise ValueError(
             f"hudi_mor_upsert: record key {record_key!r} not in frame"
@@ -1492,11 +1474,7 @@ def hudi_mor_delete(
     if props.get("hoodie.table.type") != "MERGE_ON_READ":
         raise ValueError("hudi_mor_delete: table is not MERGE_ON_READ")
     record_key = props["hoodie.table.recordkey.fields"]
-    part_cols = (
-        props.get("hoodie.table.partition.fields", "").split(",")
-        if props.get("hoodie.table.partition.fields")
-        else []
-    )
+    part_cols = _partition_fields(props)
     if record_key not in keys_df.columns:
         raise ValueError(
             f"hudi_mor_delete: record key {record_key!r} not in frame"
@@ -1563,11 +1541,7 @@ def hudi_compact(spark: SparkSession, table_path: str) -> str | None:
     them."""
     props = _table_props(table_path)
     record_key = props["hoodie.table.recordkey.fields"]
-    part_cols = (
-        props.get("hoodie.table.partition.fields", "").split(",")
-        if props.get("hoodie.table.partition.fields")
-        else []
-    )
+    part_cols = _partition_fields(props)
     slices = hudi_file_slices(table_path)
     logs = _log_files(table_path)
     logged = [

@@ -528,28 +528,6 @@ def _live_files(
     return files, delete_files, delete_rows, eq_deletes
 
 
-def _norm_path(c: Column) -> Column:
-    """Scheme-insensitive path: ``file:/a``, ``file:///a`` and ``/a``
-    all normalize to ``/a`` (Spark's ``_metadata.file_path`` is a URI;
-    manifests usually carry plain absolute paths)."""
-    return F.regexp_replace(c, r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/+", "/")
-
-
-_NORM_RE = None
-
-
-def _norm_path_py(p: str) -> str:
-    """Python-side twin of :func:`_norm_path` (the DV decode runs in
-    plain Python workers where Column expressions don't exist)."""
-    global _NORM_RE
-    if _NORM_RE is None:
-        import re
-
-        _NORM_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/+")
-    p = _NORM_RE.sub("/", p)
-    return p if p.startswith("/") else "/" + p
-
-
 def _apply_position_deletes(
     spark: SparkSession,
     keyed: DataFrame,
@@ -576,7 +554,7 @@ def _apply_position_deletes(
     if parquet_dels:
         parts.append(
             spark.read.parquet(*parquet_dels).select(
-                _norm_path(F.col("file_path")).alias("__fp"),
+                _fs.norm_path_col(F.col("file_path")).alias("__fp"),
                 F.col("pos").cast("long").alias("__pos"),
             )
         )
@@ -603,7 +581,7 @@ def _apply_position_deletes(
                     pos = _pf.read_dv(pth, int(off), int(sz))
                     yield pd.DataFrame(
                         {
-                            "__fp": [_norm_path_py(ref)] * len(pos),
+                            "__fp": [_fs.norm_path(ref)] * len(pos),
                             "__pos": pd.Series(pos, dtype="int64"),
                         }
                     )
@@ -923,7 +901,7 @@ def read_iceberg(
     cols = [f["name"] for f in schema["fields"]]
     keyed = data.withColumns(
         {
-            "__fp": _norm_path(F.col("_metadata.file_path")),
+            "__fp": _fs.norm_path_col(F.col("_metadata.file_path")),
             "__pos": F.col("_metadata.row_index"),
         }
     )
@@ -959,7 +937,7 @@ def read_iceberg(
             )
         frids = _first_row_ids(table_path, snaps[snapshot_id])
         fmap = local_frame(spark, 
-            [(_norm_path_py(p), fid) for p, fid in frids.items()],
+            [(_fs.norm_path(p), fid) for p, fid in frids.items()],
             "`__fp` string, `__frid` long",
         )
         keyed = keyed.join(F.broadcast(fmap), "__fp", "left")
@@ -1927,7 +1905,7 @@ def iceberg_delete_where(
     scan = spark.read.schema(ddl).parquet(*data_files)
     keyed = scan.withColumns(
         {
-            "__fp": _norm_path(F.col("_metadata.file_path")),
+            "__fp": _fs.norm_path_col(F.col("_metadata.file_path")),
             "__pos": F.col("_metadata.row_index"),
         }
     )
@@ -1944,7 +1922,7 @@ def iceberg_delete_where(
     # one row per live data file — planning-scale, not data-scale);
     # scheme-aware keys, or URI-backed tables silently no-op
     path_map = local_frame(spark, 
-        [(_norm_path_py(p), p) for p in data_files],
+        [(_fs.norm_path(p), p) for p in data_files],
         "`__fp` string, `file_path` string",
     )
     hits = (
@@ -2063,7 +2041,7 @@ def iceberg_dv_delete(
     scan = spark.read.schema(ddl).parquet(*data_files)
     keyed = scan.withColumns(
         {
-            "__fp": _norm_path(F.col("_metadata.file_path")),
+            "__fp": _fs.norm_path_col(F.col("_metadata.file_path")),
             "__pos": F.col("_metadata.row_index"),
         }
     )
@@ -2076,11 +2054,11 @@ def iceberg_dv_delete(
             spark, keyed, data_seqs, eq_deletes, schema
         )
     cond = F.expr(condition) if isinstance(condition, str) else condition
-    # scheme-aware keys (_norm_path_py): on a URI-backed table a
+    # scheme-aware keys (_fs.norm_path): on a URI-backed table a
     # naive '/'+p key would never match the scan's normalized
     # _metadata path and the delete would silently no-op
     path_map = local_frame(spark, 
-        [(_norm_path_py(p), p) for p in data_files],
+        [(_fs.norm_path(p), p) for p in data_files],
         "`__fp` string, `file_path` string",
     )
     hits = (
@@ -2148,7 +2126,7 @@ def iceberg_dv_delete(
         p = _localize(p)
         if not _is_abs(p):
             p = os.path.join(table_path, p)
-        return _norm_path_py(p)
+        return _fs.norm_path(p)
 
     already = {
         _ref_key(d["referenced"])
@@ -2676,7 +2654,7 @@ def iceberg_rewrite_data_files(
     if lineage:
         frids = _first_row_ids(table_path, snap)
         fmap = local_frame(spark, 
-            [(_norm_path_py(p), fid) for p, fid in frids.items()],
+            [(_fs.norm_path(p), fid) for p, fid in frids.items()],
             "`__fp` string, `__frid` long",
         )
 
@@ -2685,7 +2663,7 @@ def iceberg_rewrite_data_files(
             spark.read.schema(scan_ddl)
             .parquet(*paths)
             .withColumn(
-                "__fp", _norm_path(F.col("_metadata.file_path"))
+                "__fp", _fs.norm_path_col(F.col("_metadata.file_path"))
             )
             .withColumn("__pos", F.col("_metadata.row_index"))
         )
@@ -3143,7 +3121,7 @@ def iceberg_remove_dangling_deletes(
         s for s in meta["snapshots"] if s["snapshot-id"] == cur_id
     )
     data_seqs, _dfs, _dr, _eq = _live_files(table_path, snap)
-    live_paths = {_norm_path_py(p) for p, _ in data_seqs}
+    live_paths = {_fs.norm_path(p) for p, _ in data_seqs}
     min_live_seq = min((s for _, s in data_seqs), default=None)
     ml = _localize(snap["manifest-list"])
     if not _is_abs(ml):
@@ -3173,7 +3151,7 @@ def iceberg_remove_dangling_deletes(
             alive = True
             if fmt == "PUFFIN":
                 ref = df_rec.get("referenced_data_file") or ""
-                alive = _norm_path_py(ref) in live_paths
+                alive = _fs.norm_path(ref) in live_paths
             elif content == 1:  # position-delete parquet: read refs
                 import pyarrow.parquet as pq
 
@@ -3184,7 +3162,7 @@ def iceberg_remove_dangling_deletes(
                         .to_pylist()
                     )
                 alive = any(
-                    _norm_path_py(r) in live_paths for r in set(refs)
+                    _fs.norm_path(r) in live_paths for r in set(refs)
                 )
             else:  # equality delete: inert once no live file precedes
                 alive = min_live_seq is not None and min_live_seq < seq

@@ -37,94 +37,26 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    DataSourceStreamArrowWriter,
-    DataSourceStreamReader,
-    InputPartition,
-    WriterCommitMessage,
-)
 from pyspark.sql.types import StructField, StructType
 
 from dataset_grouper_spark.compat import fs as _fs
-
-# simple-type partition literals the Arrow emit path supports
-_PART_CASTS = {
-    "string": str,
-    "long": int,
-    "bigint": int,
-    "integer": int,
-    "int": int,
-    "short": int,
-    "double": float,
-    "float": float,
-    "boolean": lambda s: s == "true",
-}
-
-
-class _FilePartition(InputPartition):
-    def __init__(self, path, part_values, field_names, phys_names, types):
-        self.path = path
-        self.part_values = part_values  # {logical name: raw string|None}
-        self.field_names = field_names  # logical, schema order
-        self.phys_names = phys_names  # logical -> physical
-        self.types = types  # logical -> pyspark DataType (picklable)
-
-
-def _read_file_as_arrow(part):
-    """Executor-side decode: one parquet file -> Arrow batches with
-    partition literals attached and physical names mapped to logical.
-    Missing columns (pre-mergeSchema files) backfill as NULL."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    pf = pq.ParquetFile(part.path)
-    have = set(pf.schema_arrow.names)
-    data_cols = [
-        n
-        for n in part.field_names
-        if n not in part.part_values and part.phys_names[n] in have
-    ]
-    for batch in pf.iter_batches(
-        columns=[part.phys_names[n] for n in data_cols]
-    ):
-        n_rows = batch.num_rows
-        arrays, names = [], []
-        for name in part.field_names:
-            # part.types carries pickled DataType objects: no session
-            # needed executor-side (DDL parsing would require one)
-            atype = to_arrow_type(part.types[name])
-            if name in part.part_values:
-                raw = part.part_values[name]
-                if raw is None:
-                    arrays.append(pa.nulls(n_rows, type=atype))
-                else:
-                    cast = _PART_CASTS.get(part.types[name].simpleString())
-                    if cast is None:
-                        raise RuntimeError(
-                            f"delta_lite: partition column type "
-                            f"{part.types[name].simpleString()!r} "
-                            "not supported"
-                        )
-                    arrays.append(
-                        pa.array([cast(raw)] * n_rows).cast(atype)
-                    )
-            elif name in data_cols:
-                arrays.append(
-                    batch.column(data_cols.index(name)).cast(atype)
-                )
-            else:
-                arrays.append(pa.nulls(n_rows, type=atype))
-            names.append(name)
-        yield pa.RecordBatch.from_arrays(arrays, names=names)
+from dataset_grouper_spark.streaming._lite import (
+    FilePartition,
+    LiteBatchReader,
+    LiteDataSource,
+    LiteStreamReader,
+    LiteStreamWriter,
+    LiteWriter,
+    PushFilters,
+    StagedFiles,
+    StagedMessage,
+    fields_of,
+    split_partitions,
+)
 
 
 def _table_state(path: str):
-    """(schema, part_cols, phys, latest_version) from the log —
+    """(adds, schema, part_cols, phys, latest_version) from the log —
     driver-side planning read shared by batch and stream."""
     from dataset_grouper_spark.sources.delta import (
         _latest_version,
@@ -142,33 +74,23 @@ def _table_state(path: str):
 
 
 def _file_partitions(path, adds, schema, part_cols, phys):
-    field_names = [f.name for f in schema.fields]
-    types = {f.name: f.dataType for f in schema.fields}
+    """One FilePartition per add: partition columns restored from
+    ``add.partitionValues`` as literals, physical names mapped to
+    logical ones."""
+    fields = fields_of(schema)
     table_abs = os.path.abspath(path)
     out = []
     for a in adds:
         pv_raw = a.get("partitionValues") or {}
-        pv = {
-            c: pv_raw.get(phys[c], pv_raw.get(c)) for c in part_cols
-        }
+        pv = {c: pv_raw.get(phys[c], pv_raw.get(c)) for c in part_cols}
         out.append(
-            _FilePartition(
-                os.path.join(table_abs, a["path"]),
-                pv,
-                field_names,
-                phys,
-                types,
-            )
+            FilePartition(os.path.join(table_abs, a["path"]), fields, pv, phys)
         )
     return out
 
 
-class _DeltaLiteBatchReader(DataSourceReader):
-    def __init__(self, path: str):
-        self.path = path
-        self.skip_filters: list[tuple[str, str, object]] = []
-
-    def partitions(self):
+class _DeltaLiteBatchReader(LiteBatchReader):
+    def plan(self):
         from dataset_grouper_spark.sources.delta import _add_may_match
 
         adds, schema, part_cols, phys, _v = _table_state(self.path)
@@ -188,121 +110,32 @@ class _DeltaLiteBatchReader(DataSourceReader):
                 for a in live
                 if _add_may_match(a, self.skip_filters, part_cols, phys)
             ]
-        parts = _file_partitions(self.path, live, schema, part_cols, phys)
-        return parts or [None]
-
-    def read(self, partition):
-        if partition is None:
-            return iter(())
-        return _read_file_as_arrow(partition)
+        return _file_partitions(self.path, live, schema, part_cols, phys)
 
 
-class _DeltaLitePushdownReader(_DeltaLiteBatchReader):
-    """The pushdown-capable variant, OPT-IN via
-    ``.option("pushdown", "true")`` — separate class because Spark
-    refuses any reader that defines ``pushFilters`` unless
-    ``spark.sql.python.filterPushdown.enabled`` is true (our
-    ``session.get_spark`` sets it).
-
-    WHY OPT-IN — verified at the bytecode level on Spark 4.1.2 (this
-    repo's probe, r7): the JVM's ``PythonDataSourceV2`` holds ONE
-    mutable ``readInfo`` slot per ``load()`` relation.
-    ``PythonScanBuilder.pushFilters`` re-runs the Python pushdown
-    runner and ``setReadInfo``-overwrites the slot — so every plan
-    WITH a translatable filter is correct, including two different
-    filters on the same relation (each re-plans; regression-tested).
-    But ``UserDefinedPythonDataSource.pushdownFiltersInPython`` gates
-    the runner on ``isAnyFilterSupported``: a later plan on the SAME
-    relation with NO translatable filters (unfiltered, or only
-    disjunctions) skips the runner entirely and
-    ``PythonBatch.planInputPartitions -> getOrCreateReadInfo`` reuses
-    the poisoned slot — the unfiltered query silently serves the
-    previous plan's pruned file set. The staleness lives in the JVM
-    slot, NOT in Python reader state (a fresh reader is constructed
-    per runner invocation — see pyspark/sql/worker/
-    data_source_pushdown_filters.py), so NO Python-side design can
-    make default-on safe: any filter-dependent partitions/read-func
-    stored in the slot is wrong for a reusing plan, and
-    filter-independent ones are no pushdown at all. Default therefore
-    stays stateless/off; the hazard ordering is pinned by a canary
-    test that will flip when a Spark release fixes the slot (then
-    flip the default). Rule when opting in: ONE ``load()`` per
-    query."""
-
-    def pushFilters(self, filters):
-        """FILE-LEVEL pushdown: comparison filters on top-level
-        columns feed the log-stats skip planner (add.stats envelopes +
-        partitionValues), so `spark.read.format("delta_lite")...
-        .filter("id < k")` plans only candidate files. Skipping is
-        never exact, so EVERY filter is returned for Spark to
-        re-evaluate row-level — pushdown here prunes I/O, it does not
-        replace the filter."""
-        from pyspark.sql.datasource import (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            In,
-            LessThan,
-            LessThanOrEqual,
-        )
-
-        ops = {
-            EqualTo: "=",
-            LessThan: "<",
-            LessThanOrEqual: "<=",
-            GreaterThan: ">",
-            GreaterThanOrEqual: ">=",
-        }
-        for f in filters:
-            op = ops.get(type(f))
-            if (
-                op is not None
-                and len(f.attribute) == 1
-                and f.value is not None
-            ):
-                self.skip_filters.append((f.attribute[0], op, f.value))
-            elif (
-                isinstance(f, In)
-                and len(f.attribute) == 1
-                and f.value
-                and all(v is not None for v in f.value)
-            ):
-                # IN ⊆ [min(values), max(values)]: a sound envelope
-                # conjunction (weaker than per-value, still prunes)
-                self.skip_filters.append(
-                    (f.attribute[0], ">=", min(f.value))
-                )
-                self.skip_filters.append(
-                    (f.attribute[0], "<=", max(f.value))
-                )
-            yield f  # Spark always re-evaluates: skipping is file-level
+class _DeltaLitePushdownReader(PushFilters, _DeltaLiteBatchReader):
+    """Opt-in pushdown (see :class:`PushFilters` for why it is not the
+    default): comparison filters on top-level columns feed the
+    log-stats skip planner (add.stats envelopes + partitionValues), so
+    ``spark.read.format("delta_lite")....filter("id < k")`` plans only
+    candidate files."""
 
 
-class _DeltaLiteStreamReader(DataSourceStreamReader):
-    def __init__(self, path: str, starting_version: int | None):
-        self.path = path
-        self.starting_version = starting_version
+class _DeltaLiteStreamReader(LiteStreamReader):
+    offset_key, offset_type = "version", int
 
-    def initialOffset(self):
-        if self.starting_version is not None:
-            return {"version": int(self.starting_version) - 1}
-        return {"version": -1}
+    def initial(self):
+        return -1 if self.start is None else self.start - 1
 
-    def latestOffset(self):
+    def latest(self):
         from dataset_grouper_spark.sources.delta import _latest_version
 
         v = _latest_version(self.path)
-        return {"version": -1 if v is None else v}
+        return -1 if v is None else v
 
-    def partitions(self, start, end):
-        from dataset_grouper_spark.sources.delta import (
-            _replay,
-            delta_versions,
-        )
+    def files_between(self, lo, hi):
+        from dataset_grouper_spark.sources.delta import delta_versions
 
-        lo, hi = int(start["version"]), int(end["version"])
-        if hi <= lo:
-            return [None]
         versions = [v for v in delta_versions(self.path) if lo < v <= hi]
         expect = list(range(lo + 1, hi + 1))
         if versions != expect:
@@ -333,37 +166,12 @@ class _DeltaLiteStreamReader(DataSourceStreamReader):
                         "(update/delete) — the streaming source is "
                         "append-only"
                     )
-        parts = _file_partitions(
-            self.path, new_adds, schema, part_cols, phys
-        )
-        return parts or [None]
-
-    def read(self, partition):
-        if partition is None:
-            return iter(())
-        return _read_file_as_arrow(partition)
-
-    def commit(self, end):
-        pass  # offsets live in Spark's own checkpoint
-
-
-class _DeltaWriteMessage(WriterCommitMessage):
-    """One per task. ``files`` lists (relative path, partitionValues)
-    for every parquet file the task staged — one per distinct
-    partition tuple it saw (one total when unpartitioned). ``rel``
-    kept as the single-file accessor for unpartitioned callers."""
-
-    def __init__(self, files: list[tuple[str, dict]] | None = None):
-        self.files = files or []
-
-    @property
-    def rel(self):
-        return self.files[0][0] if self.files else None
+        return _file_partitions(self.path, new_adds, schema, part_cols, phys)
 
 
 def _pv_string(value) -> str | None:
     """Delta ``add.partitionValues`` literal for a python value — the
-    inverse of the reader's ``_PART_CASTS`` (same supported simple
+    inverse of the reader's literal parsing (same supported simple
     types; anything else raises rather than writing a literal the
     reader cannot restore)."""
     if value is None:
@@ -383,26 +191,25 @@ def _pv_string(value) -> str | None:
     )
 
 
-def _write_task_files(
-    path, iterator, part_cols, drop_part_cols=True, rename=None
-):
+def _write_task_files(path, iterator, part_cols, rename=None):
     """Executor-side staging shared by the delta_lite batch and stream
     writers: stream this task's Arrow batches into ONE parquet file
-    per distinct partition tuple (unpartitioned: exactly one file).
-    Partition columns live OUTSIDE the data files, Delta-style, their
-    values in the returned messages. Upstream should repartition by
-    the partition columns so a task sees few distinct tuples — the
-    same discipline as any partitioned write at 100 TB.
+    per distinct partition tuple (unpartitioned: exactly one file),
+    placed directly in the table directory. Partition columns live
+    OUTSIDE the data files, Delta-style; each staged file carries its
+    ``partitionValues``. Upstream should repartition by the partition
+    columns so a task sees few distinct tuples — the same discipline
+    as any partitioned write at 100 TB.
 
-    ``rename`` (logical -> physical, r13) writes COLUMN-MAPPED
-    tables: data files land under the stable ``col-<n>`` physical
-    names from the field metadata (a logical-named file in a mapped
-    table reads back all-NULL — the failure mapping exists to
-    prevent) and partitionValues keys go physical, the
-    ``delta_append`` convention."""
+    ``rename`` (logical -> physical) writes COLUMN-MAPPED tables: data
+    files land under the stable ``col-<n>`` physical names from the
+    field metadata (a logical-named file in a mapped table reads back
+    all-NULL — the failure mapping exists to prevent) and
+    partitionValues keys go physical, the ``delta_append``
+    convention."""
     import uuid
 
-    import pyarrow.parquet as pq
+    rename = rename or {}
 
     def _renamed(batch):
         if not rename:
@@ -412,87 +219,42 @@ def _write_task_files(
         )
 
     _fs.makedirs(path)
-    if not part_cols:
-        rel = f"part-{uuid.uuid4().hex}.parquet"
-        dst = os.path.join(path, rel)
-        writer = None
-        for batch in iterator:
-            batch = _renamed(batch)
-            if writer is None:
-                writer = pq.ParquetWriter(_fs.open_write(dst), batch.schema)
-            writer.write_batch(batch)
-        if writer is None:
-            return _DeltaWriteMessage()
-        writer.close()
-        return _DeltaWriteMessage([(rel, {})])
-    import pyarrow as pa
-
-    writers: dict[tuple, tuple] = {}  # tuple -> (pq writer, rel, pv)
+    staged = StagedFiles(
+        lambda _key: os.path.join(path, f"part-{uuid.uuid4().hex}.parquet")
+    )
+    values: dict[tuple, dict] = {}  # partition key -> partitionValues
     for batch in iterator:
-        key_batch = batch.select(part_cols)
-        key_arrays = []
-        for f in key_batch.schema:
-            col = key_batch.column(f.name)
-            if pa.types.is_integer(f.type):
-                # to_pandas would coerce a NULL-carrying int column to
-                # float64 and the literal would read back as '2.0' —
-                # stringify on the Arrow side where int-ness is exact
-                col = col.cast(pa.string())
-            key_arrays.append(col)
-        key_df = pa.RecordBatch.from_arrays(
-            key_arrays, names=list(part_cols)
-        ).to_pandas()
-        groups = key_df.groupby(part_cols, dropna=False, sort=False)
-        data = _renamed(
-            batch.drop_columns(part_cols) if drop_part_cols else batch
-        )
-        for tup, idx in groups.indices.items():
-            if len(part_cols) == 1:
-                tup = (tup,)
-            pv = {}
-            for c, v in zip(part_cols, tup):
-                try:
-                    v = None if v != v else v  # pandas NaN -> null
-                except (TypeError, ValueError):
-                    pass
-                if v is not None and hasattr(v, "item"):
-                    v = v.item()  # numpy scalar -> python
-                pv[(rename or {}).get(c, c)] = _pv_string(v)
-            k = tuple(sorted(pv.items()))
-            if k not in writers:
-                rel = f"part-{uuid.uuid4().hex}.parquet"
-                sliced = data.take(idx)
-                w = pq.ParquetWriter(
-                    _fs.open_write(os.path.join(path, rel)), sliced.schema
-                )
-                writers[k] = (w, rel, pv)
-                w.write_batch(sliced)
-            else:
-                writers[k][0].write_batch(data.take(idx))
-    if not writers:
-        return _DeltaWriteMessage()
-    files = []
-    for w, rel, pv in writers.values():
-        w.close()
-        files.append((rel, pv))
-    return _DeltaWriteMessage(files)
+        if not part_cols:
+            staged.write((), _renamed(batch))
+            continue
+        data = _renamed(batch.drop_columns(part_cols))
+        for key, idx in split_partitions(batch, part_cols):
+            if key not in values:
+                first = idx[0].as_py()
+                values[key] = {
+                    rename.get(c, c): _pv_string(batch.column(c)[first].as_py())
+                    for c in part_cols
+                }
+            staged.write(key, data.take(idx))
+    return StagedMessage(
+        [(dst, values.get(key, {})) for key, dst, _n in staged.close()]
+    )
 
 
-class _DeltaLiteArrowWriter(DataSourceArrowWriter):
+class _DeltaLiteArrowWriter(LiteWriter):
     """Write half of the ``delta_lite`` format — the Delta commit
     protocol spoken through the Python data source API:
 
         df.write.format("delta_lite").mode("append").option("path", t).save()
 
-    Each task streams its Arrow batches into ONE parquet file placed
+    Each task streams its Arrow batches into parquet files placed
     directly in the table directory (invisible until committed —
-    Delta's contract makes staging free), returns its relative path,
-    and the driver-side ``commit`` claims the next ``<version>.json``
-    with an exclusive create: protocol+metaData on table creation,
-    remove-everything first under ``mode("overwrite")``, footer-derived
-    ``add.stats`` always (so data skipping works on API-written
-    tables). ``abort`` deletes the uncommitted files — readers never
-    saw them.
+    Delta's contract makes staging free), and the driver-side
+    ``commit`` claims the next ``<version>.json`` with an exclusive
+    create: protocol+metaData on table creation, remove-everything
+    first under ``mode("overwrite")``, footer-derived ``add.stats``
+    always (so data skipping works on API-written tables). ``abort``
+    deletes the uncommitted files — readers never saw them.
 
     Partitioned writes: an EXISTING partitioned table's partition
     columns are honored automatically (each task splits its batches
@@ -503,15 +265,20 @@ class _DeltaLiteArrowWriter(DataSourceArrowWriter):
     ``add.partitionValues`` — exactly the layout
     ``sources.delta.delta_append(partition_by=...)`` commits.
 
-    COLUMN-MAPPED tables (r13, VERDICT r12 task 3) write correctly:
-    the factory resolves the logical->physical map driver-side, write
-    tasks stage files under the stable ``col-<n>`` PHYSICAL names
-    with physical partitionValues keys (the ``delta_append``
-    convention), stats are keyed physical, and commit() re-checks the
-    table's mapping so a concurrent re-map fails loudly instead of
-    committing wrong-named files.
+    COLUMN-MAPPED tables write correctly: the factory resolves the
+    logical->physical map driver-side, write tasks stage files under
+    the stable ``col-<n>`` PHYSICAL names with physical
+    partitionValues keys (the ``delta_append`` convention), stats are
+    keyed physical, and commit re-checks the table's mapping so a
+    concurrent re-map fails loudly instead of committing wrong-named
+    files.
 
     Honest gate: schema must match an existing table."""
+
+    label = "delta_lite write"
+    table_id = "delta-lite-write"
+    remap_hint = "during the write — re-run"
+    race_hint = "re-run the write"
 
     def __init__(
         self,
@@ -521,41 +288,19 @@ class _DeltaLiteArrowWriter(DataSourceArrowWriter):
         part_cols: list[str] | None = None,
         phys: dict[str, str] | None = None,
     ):
-        self.path = os.path.abspath(path)
-        self.overwrite = overwrite
-        self.schema = schema
-        self.part_cols = list(part_cols or [])
+        super().__init__(path, overwrite, schema, part_cols)
         # logical -> physical for columns whose names differ (empty on
         # unmapped and new tables)
-        self.phys = {
-            k: v for k, v in (phys or {}).items() if k != v
-        }
-        missing = [c for c in self.part_cols if c not in schema.names]
-        if missing:
-            raise ValueError(
-                f"delta_lite write: partition columns {missing} not in "
-                f"the frame ({schema.names})"
-            )
+        self.phys = {k: v for k, v in (phys or {}).items() if k != v}
 
     def write(self, iterator):
         return _write_task_files(
             self.path, iterator, self.part_cols, rename=self.phys
         )
 
-    def _cleanup(self, messages):
-        for m in messages:
-            if m is None:
-                continue
-            for rel, _pv in m.files:
-                try:
-                    _fs.remove(os.path.join(self.path, rel))
-                except (OSError, FileNotFoundError):
-                    pass
-
-    def abort(self, messages):
-        self._cleanup(messages)
-
-    def commit(self, messages):
+    def _commit(self, messages, txn=None):
+        """One atomic commit of every staged file; ``txn`` (stream
+        writes) adds the ``txn {appId, version=batchId}`` action."""
         from dataset_grouper_spark.sources.delta import (
             _file_stats,
             _latest_version,
@@ -564,12 +309,7 @@ class _DeltaLiteArrowWriter(DataSourceArrowWriter):
             _replay,
         )
 
-        files = sorted(
-            (rel, pv)
-            for m in messages
-            if m is not None
-            for rel, pv in m.files
-        )
+        stream = txn is not None
         log = _log_path(self.path)
         try:
             latest = _latest_version(self.path)
@@ -578,21 +318,13 @@ class _DeltaLiteArrowWriter(DataSourceArrowWriter):
         actions: list[dict] = []
         if latest is None:
             actions.append(
-                {
-                    "protocol": {
-                        "minReaderVersion": 1,
-                        "minWriterVersion": 2,
-                    }
-                }
+                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
             )
             actions.append(
                 {
                     "metaData": {
-                        "id": "delta-lite-write",
-                        "format": {
-                            "provider": "parquet",
-                            "options": {},
-                        },
+                        "id": self.table_id,
+                        "format": {"provider": "parquet", "options": {}},
                         "schemaString": self.schema.json(),
                         "partitionColumns": self.part_cols,
                         "configuration": {},
@@ -603,42 +335,19 @@ class _DeltaLiteArrowWriter(DataSourceArrowWriter):
             _fs.makedirs(log)
         else:
             adds, meta = _replay(None, self.path, latest)
-            have = StructType.fromJson(
-                json.loads(meta["schemaString"])
-            )
-            if [ (f.name, f.dataType) for f in have.fields ] != [
-                (f.name, f.dataType) for f in self.schema.fields
-            ]:
-                self._cleanup(messages)
-                raise ValueError(
-                    f"delta_lite write: schema mismatch — table has "
-                    f"{[f.name for f in have.fields]}, frame has "
-                    f"{[f.name for f in self.schema.fields]}"
-                )
-            table_parts = list(meta.get("partitionColumns") or [])
-            if table_parts != self.part_cols:
-                self._cleanup(messages)
-                raise ValueError(
-                    f"delta_lite write: partition columns mismatch — "
-                    f"table has {table_parts}, write declared "
-                    f"{self.part_cols} (an existing table's partitioning "
-                    "is honored automatically; drop the partitionBy "
-                    "option or make it match)"
-                )
+            if not stream:
+                # only batch writes compare the frame's schema and
+                # partitioning with the table; stream commits re-check
+                # just the column mapping below
+                self._check_table(meta)
             phys = _physical_names(meta)
-            now = {
-                f.name: phys[f.name]
-                for f in have.fields
-                if phys[f.name] != f.name
-            }
-            if now != self.phys:
+            if {k: v for k, v in phys.items() if k != v} != self.phys:
                 # the mapping this writer staged files under no longer
                 # matches the table (re-mapped mid-write): committing
                 # would register wrong-named files that read all-NULL
-                self._cleanup(messages)
                 raise RuntimeError(
-                    "delta_lite write: the table's column mapping "
-                    "changed during the write — re-run"
+                    f"{self.label}: the table's column mapping changed "
+                    f"{self.remap_hint}"
                 )
             version = latest + 1
             if self.overwrite:
@@ -655,19 +364,27 @@ class _DeltaLiteArrowWriter(DataSourceArrowWriter):
                             }
                         }
                     )
-        stats_fields = [
-            StructField(
-                self.phys.get(f.name, f.name), f.dataType, True
+        if stream:
+            actions.append(
+                {
+                    "txn": {
+                        "appId": self.app_id,
+                        "version": txn,
+                        "lastUpdated": 0,
+                    }
+                }
             )
+        stats_fields = [
+            StructField(self.phys.get(f.name, f.name), f.dataType, True)
             for f in self.schema.fields
             if f.name not in self.part_cols
         ]
-        for rel, pv in files:
-            dst = os.path.join(self.path, rel)
+        staged = sorted(f for m in messages if m is not None for f in m.files)
+        for dst, pv in staged:
             actions.append(
                 {
                     "add": {
-                        "path": rel,
+                        "path": os.path.basename(dst),
                         "partitionValues": pv,
                         "size": _fs.file_size(dst),
                         "modificationTime": 0,
@@ -684,15 +401,34 @@ class _DeltaLiteArrowWriter(DataSourceArrowWriter):
                 f.write(data.encode())
         except FileExistsError:
             # a concurrent writer claimed the version; our files are
-            # uncommitted and must not linger
-            self._cleanup(messages)
+            # uncommitted and must not linger (the caller cleans up)
             raise RuntimeError(
-                f"delta_lite write: lost the commit race at version "
-                f"{version} — re-run the write"
+                f"{self.label}: lost the commit race at version "
+                f"{version} — {self.race_hint}"
+            )
+
+    def _check_table(self, meta):
+        have = StructType.fromJson(json.loads(meta["schemaString"]))
+        if [(f.name, f.dataType) for f in have.fields] != [
+            (f.name, f.dataType) for f in self.schema.fields
+        ]:
+            raise ValueError(
+                f"delta_lite write: schema mismatch — table has "
+                f"{[f.name for f in have.fields]}, frame has "
+                f"{[f.name for f in self.schema.fields]}"
+            )
+        table_parts = list(meta.get("partitionColumns") or [])
+        if table_parts != self.part_cols:
+            raise ValueError(
+                f"delta_lite write: partition columns mismatch — "
+                f"table has {table_parts}, write declared "
+                f"{self.part_cols} (an existing table's partitioning "
+                "is honored automatically; drop the partitionBy "
+                "option or make it match)"
             )
 
 
-class _DeltaLiteStreamArrowWriter(DataSourceStreamArrowWriter):
+class _DeltaLiteStreamArrowWriter(LiteStreamWriter, _DeltaLiteArrowWriter):
     """Streaming write half: ``df.writeStream.format("delta_lite")``.
     Exactly-once by the Delta protocol's own mechanism — each
     micro-batch's files and a ``txn {appId, version=batchId}`` action
@@ -706,6 +442,11 @@ class _DeltaLiteStreamArrowWriter(DataSourceStreamArrowWriter):
     honored automatically, a new table takes
     ``.option("partitionBy", "a,b")``."""
 
+    label = "delta_lite stream write"
+    table_id = "delta-lite-stream"
+    remap_hint = "during the stream — restart the query"
+    race_hint = "the engine will retry the batch"
+
     def __init__(
         self,
         path: str,
@@ -714,134 +455,21 @@ class _DeltaLiteStreamArrowWriter(DataSourceStreamArrowWriter):
         part_cols: list[str] | None = None,
         phys: dict[str, str] | None = None,
     ):
-        self.path = os.path.abspath(path)
-        self.schema = schema
+        super().__init__(path, False, schema, part_cols, phys)
         self.app_id = app_id
-        self.part_cols = list(part_cols or [])
-        self.phys = {
-            k: v for k, v in (phys or {}).items() if k != v
-        }
-        missing = [c for c in self.part_cols if c not in schema.names]
-        if missing:
-            raise ValueError(
-                f"delta_lite stream write: partition columns {missing} "
-                f"not in the frame ({schema.names})"
-            )
 
-    # per-task staging + uncommitted-file cleanup, shared with the
-    # batch writer (same contract: one file per partition tuple,
-    # column-mapped tables staged under physical names)
-    write = _DeltaLiteArrowWriter.write
-    _cleanup = _DeltaLiteArrowWriter._cleanup
+    def last_epoch(self):
+        from dataset_grouper_spark.sources.delta import _latest_version
 
-    def commit(self, messages, batchId):
-        from dataset_grouper_spark.sources.delta import (
-            _file_stats,
-            _latest_version,
-            _log_path,
-            _physical_names,
-            _replay,
-        )
-
-        log = _log_path(self.path)
         try:
-            latest = _latest_version(self.path)
+            if _latest_version(self.path) is None:
+                return None
         except FileNotFoundError:
-            latest = None
-        if latest is not None:
-            last = _stream_last_txn(self.path, self.app_id)
-            if last is not None and batchId <= last:
-                self._cleanup(messages)  # replayed epoch: no-op
-                return
-            _adds, meta = _replay(None, self.path, latest)
-            phys = _physical_names(meta)
-            now = {k: v for k, v in phys.items() if k != v}
-            if now != self.phys:
-                self._cleanup(messages)
-                raise RuntimeError(
-                    "delta_lite stream write: the table's column "
-                    "mapping changed during the stream — restart the "
-                    "query"
-                )
-        files = sorted(
-            (rel, pv)
-            for m in messages
-            if m is not None
-            for rel, pv in m.files
-        )
-        actions: list[dict] = []
-        if latest is None:
-            actions.append(
-                {
-                    "protocol": {
-                        "minReaderVersion": 1,
-                        "minWriterVersion": 2,
-                    }
-                }
-            )
-            actions.append(
-                {
-                    "metaData": {
-                        "id": "delta-lite-stream",
-                        "format": {
-                            "provider": "parquet",
-                            "options": {},
-                        },
-                        "schemaString": self.schema.json(),
-                        "partitionColumns": self.part_cols,
-                        "configuration": {},
-                    }
-                }
-            )
-            version = 0
-            _fs.makedirs(log)
-        else:
-            version = latest + 1
-        actions.append(
-            {
-                "txn": {
-                    "appId": self.app_id,
-                    "version": int(batchId),
-                    "lastUpdated": 0,
-                }
-            }
-        )
-        stats_fields = [
-            StructField(
-                self.phys.get(f.name, f.name), f.dataType, True
-            )
-            for f in self.schema.fields
-            if f.name not in self.part_cols
-        ]
-        for rel, pv in files:
-            dst = os.path.join(self.path, rel)
-            actions.append(
-                {
-                    "add": {
-                        "path": rel,
-                        "partitionValues": pv,
-                        "size": _fs.file_size(dst),
-                        "modificationTime": 0,
-                        "dataChange": True,
-                        "stats": _file_stats(dst, stats_fields),
-                    }
-                }
-            )
-        try:
-            data = "".join(json.dumps(a) + "\n" for a in actions)
-            with _fs.open_create(
-                os.path.join(log, f"{version:020d}.json")
-            ) as f:
-                f.write(data.encode())
-        except FileExistsError:
-            self._cleanup(messages)
-            raise RuntimeError(
-                f"delta_lite stream write: lost the commit race at "
-                f"version {version} — the engine will retry the batch"
-            )
+            return None
+        return _stream_last_txn(self.path, self.app_id)
 
-    def abort(self, messages, batchId):
-        self._cleanup(messages)
+    def commit_epoch(self, messages, batch_id):
+        self._commit_or_cleanup(messages, txn=batch_id)
 
 
 def _stream_last_txn(path: str, app_id: str):
@@ -882,47 +510,32 @@ def _stream_last_txn(path: str, app_id: str):
     return best
 
 
-class DeltaLiteDataSource(DataSource):
+class DeltaLiteDataSource(LiteDataSource):
     """``spark.dataSource.register(DeltaLiteDataSource)`` then
     ``.format("delta_lite").option("path", table_path)``. Options:
     ``path`` (required), ``startingVersion`` (stream only — first
     commit to consume; default 0, i.e. the whole table then the
     tail)."""
 
+    batch_reader = _DeltaLiteBatchReader
+    pushdown_reader = _DeltaLitePushdownReader
+
     @classmethod
     def name(cls):
         return "delta_lite"
 
-    def _path(self) -> str:
-        p = self.options.get("path")
-        if not p:
-            raise ValueError("delta_lite: option 'path' is required")
-        return p
-
     def schema(self):
         _adds, schema, _pc, _ph, _v = _table_state(self._path())
         return schema
-
-    def reader(self, schema):
-        # pushdown is OPT-IN: the pushdown scan carries per-query
-        # state that Spark's relation-level scan cache can leak into a
-        # later unfiltered query on the SAME load() (see
-        # _DeltaLitePushdownReader docstring). Default = stateless.
-        if str(self.options.get("pushdown", "false")).lower() == "true":
-            return _DeltaLitePushdownReader(self._path())
-        return _DeltaLiteBatchReader(self._path())
 
     def _write_conf(self) -> tuple[list[str], dict[str, str]]:
         """(partition columns, logical->physical map) for a write: an
         existing table's partitioning and column mapping are
         authoritative; a new table takes
         ``.option("partitionBy", "a,b")`` and no mapping. A declared
-        option that contradicts an existing table fails here; commit()
+        option that contradicts an existing table fails here; commit
         re-checks both against the then-current log."""
-        opt = self.options.get("partitionBy")
-        declared = (
-            [c.strip() for c in opt.split(",") if c.strip()] if opt else []
-        )
+        declared = self._partition_by()
         try:
             _adds, _schema, table_parts, phys, _v = _table_state(
                 self._path()

@@ -71,16 +71,21 @@ import json
 import os
 
 from dataset_grouper_spark.compat import fs as _fs
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    DataSourceStreamArrowWriter,
-    DataSourceStreamReader,
-    InputPartition,
-    WriterCommitMessage,
+from dataset_grouper_spark.streaming._lite import (
+    FilePartition,
+    LiteBatchReader,
+    LiteDataSource,
+    LiteStreamReader,
+    LiteStreamWriter,
+    LiteWriter,
+    StagedFiles,
+    StagedMessage,
+    fields_of,
+    project,
+    split_partitions,
 )
-from pyspark.sql.types import StructType
+from pyspark.sql.datasource import InputPartition
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 _CDC_COLS = ["_change_type", "_change_key", "_commit_instant"]
@@ -105,8 +110,6 @@ def _table_schema(path: str) -> StructType:
         raise ValueError(f"hudi_lite: no completed file slices in {path}")
     newest = max(slices, key=lambda s: s[2])[3]
     arrow = pq.read_schema(newest)
-    from pyspark.sql.types import StructField
-
     fields = [
         StructField(n, from_arrow_type(arrow.field(n).type), True)
         for n in arrow.names
@@ -115,38 +118,23 @@ def _table_schema(path: str) -> StructType:
     return StructType(fields)
 
 
-class _FilePartition(InputPartition):
-    def __init__(self, path, field_names, types):
-        self.path = path
-        self.field_names = field_names
-        self.types = types  # name -> pyspark DataType (picklable)
+def _read_conf(path: str):
+    """(fields, record key, partition columns, precombine column) —
+    the planning read shared by the batch and stream readers."""
+    from dataset_grouper_spark.sources.hudi import (
+        _partition_fields,
+        _precombine_col,
+        _table_props,
+    )
 
-
-def _read_file_as_arrow(part):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    pf = pq.ParquetFile(part.path)
-    have = set(pf.schema_arrow.names)
-    data_cols = [n for n in part.field_names if n in have]
-    for batch in pf.iter_batches(columns=data_cols):
-        n_rows = batch.num_rows
-        arrays = []
-        for name in part.field_names:
-            atype = to_arrow_type(part.types[name])
-            if name in have:
-                arrays.append(batch.column(data_cols.index(name)).cast(atype))
-            else:
-                arrays.append(pa.nulls(n_rows, type=atype))
-        yield pa.RecordBatch.from_arrays(arrays, names=part.field_names)
-
-
-def _partitions_for(paths, struct):
-    field_names = [f.name for f in struct.fields]
-    types = {f.name: f.dataType for f in struct.fields}
-    return [_FilePartition(p, field_names, types) for p in paths]
+    fields = fields_of(_table_schema(path))
+    props = _table_props(path)
+    return (
+        fields,
+        props["hoodie.table.recordkey.fields"],
+        _partition_fields(props),
+        _precombine_col(props, [n for n, _t in fields]),
+    )
 
 
 def _py_part_path(part_cols, payload):
@@ -253,7 +241,8 @@ def _decode_log_group(
     return out
 
 
-def _payloads_to_arrow(payloads, field_names, types, prefix=None):
+
+def _payloads_to_arrow(payloads, fields, prefix=None):
     """Build one Arrow RecordBatch from decoded log payload dicts
     (typed per the table schema; absent columns null). ``prefix`` is
     an optional ``[(name, list_of_values)]`` of string columns
@@ -266,12 +255,11 @@ def _payloads_to_arrow(payloads, field_names, types, prefix=None):
     for name, vals in prefix or []:
         names.append(name)
         arrays.append(pa.array(vals, type=pa.string()))
-    for name in field_names:
-        atype = to_arrow_type(types[name])
+    for name, dtype in fields:
         arrays.append(
             pa.array(
                 [p.get(name) if p is not None else None for p in payloads],
-                type=atype,
+                type=to_arrow_type(dtype),
             )
         )
         names.append(name)
@@ -285,15 +273,17 @@ class _MorSlicePartition(InputPartition):
     is the global merge."""
 
     def __init__(self, base_path, log_groups, visible, record_key,
-                 precombine, part_cols, field_names, types):
+                 precombine, part_cols, fields):
         self.base_path = base_path
         self.log_groups = log_groups
         self.visible = visible
         self.record_key = record_key
         self.precombine = precombine
         self.part_cols = part_cols
-        self.field_names = field_names
-        self.types = types
+        self.fields = fields
+
+    def read(self):
+        return _read_merged_slice(self)
 
 
 def _read_merged_slice(part):
@@ -384,66 +374,25 @@ def _read_merged_slice(part):
     winners = winners[winners["op"] == "u"]
     base_idx = winners.loc[winners["src"] == "b", "idx"].tolist()
     if base_idx:
-        sub = _FilePartitionView(
-            base.take(sorted(base_idx)), part.field_names, part.types
-        )
-        yield from sub
+        yield from project(base.take(sorted(base_idx)).to_batches(), part.fields)
     log_idx = winners.loc[winners["src"] == "l", "idx"].tolist()
     if log_idx:
         yield _payloads_to_arrow(
-            [logs[i][6] for i in sorted(log_idx)],
-            part.field_names,
-            part.types,
+            [logs[i][6] for i in sorted(log_idx)], part.fields
         )
 
 
-def _FilePartitionView(tbl, field_names, types):
-    """Project an in-memory Arrow table to the declared schema (same
-    null-backfill + cast law as ``_read_file_as_arrow``)."""
-    import pyarrow as pa
 
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    have = set(tbl.column_names)
-    for batch in tbl.to_batches():
-        n_rows = batch.num_rows
-        arrays = []
-        for name in field_names:
-            atype = to_arrow_type(types[name])
-            if name in have:
-                arrays.append(
-                    batch.column(tbl.column_names.index(name)).cast(atype)
-                )
-            else:
-                arrays.append(pa.nulls(n_rows, type=atype))
-        yield pa.RecordBatch.from_arrays(arrays, names=field_names)
-
-
-class _HudiLiteBatchReader(DataSourceReader):
-    def __init__(self, path: str):
-        self.path = path
-
-    def partitions(self):
+class _HudiLiteBatchReader(LiteBatchReader):
+    def plan(self):
         from dataset_grouper_spark.sources.hudi import (
             _completed,
             _group_log_paths,
             _log_files,
-            _precombine_col,
-            _table_props,
             hudi_file_slices,
         )
 
-        struct = _table_schema(self.path)
-        field_names = [f.name for f in struct.fields]
-        types = {f.name: f.dataType for f in struct.fields}
-        props = _table_props(self.path)
-        record_key = props["hoodie.table.recordkey.fields"]
-        part_cols = (
-            props.get("hoodie.table.partition.fields", "").split(",")
-            if props.get("hoodie.table.partition.fields")
-            else []
-        )
-        precombine = _precombine_col(props, field_names)
+        fields, record_key, part_cols, precombine = _read_conf(self.path)
         logs = _log_files(self.path)
         completed = set(_completed(self.path)) if logs else None
         parts: list = []
@@ -452,7 +401,7 @@ class _HudiLiteBatchReader(DataSourceReader):
             if not entries:
                 # unlogged groups stream straight through — only
                 # logged slices pay the merge (MoR read economics)
-                parts.append(_FilePartition(path, field_names, types))
+                parts.append(FilePartition(path, fields))
             else:
                 parts.append(
                     _MorSlicePartition(
@@ -462,18 +411,10 @@ class _HudiLiteBatchReader(DataSourceReader):
                         record_key,
                         precombine,
                         part_cols,
-                        field_names,
-                        types,
+                        fields,
                     )
                 )
-        return parts or [None]
-
-    def read(self, partition):
-        if partition is None:
-            return iter(())
-        if isinstance(partition, _MorSlicePartition):
-            return _read_merged_slice(partition)
-        return _read_file_as_arrow(partition)
+        return parts
 
 
 class _LogChangePartition(InputPartition):
@@ -483,128 +424,69 @@ class _LogChangePartition(InputPartition):
     deletes)."""
 
     def __init__(self, log_groups, visible, record_key, precombine,
-                 part_cols, field_names, types):
+                 part_cols, fields):
         self.log_groups = log_groups
         self.visible = visible
         self.record_key = record_key
         self.precombine = precombine
         self.part_cols = part_cols
-        self.field_names = field_names
-        self.types = types
+        self.fields = fields
 
-
-def _read_log_changes(part):
-    recs = _decode_log_group(
-        part.log_groups, part.visible, part.record_key,
-        part.precombine, part.part_cols,
-    )
-    if not recs:
-        return
-    yield _payloads_to_arrow(
-        [r[6] for r in recs],
-        part.field_names,
-        part.types,
-        prefix=[
-            (
-                "_change_type",
-                [
-                    "delete" if r[0] == "d" else "update_postimage"
-                    for r in recs
-                ],
-            ),
-            ("_change_key", [r[4] for r in recs]),
-            ("_commit_instant", [r[1] for r in recs]),
-        ],
-    )
-
-
-class _InsertFilePartition(InputPartition):
-    """A base file a commit in range wrote, surfaced as CDC 'insert'
-    rows (``_change_key`` from the file's own ``_hoodie_record_key``
-    column)."""
-
-    def __init__(self, path, field_names, types, instant):
-        self.path = path
-        self.field_names = field_names
-        self.types = types
-        self.instant = instant
-
-
-def _read_insert_file_cdc(part):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    pf = pq.ParquetFile(part.path)
-    have = set(pf.schema_arrow.names)
-    data_cols = [n for n in part.field_names if n in have]
-    read_cols = data_cols + ["_hoodie_record_key"]
-    for batch in pf.iter_batches(columns=read_cols):
-        n_rows = batch.num_rows
-        key = batch.column(read_cols.index("_hoodie_record_key")).cast(
-            pa.string()
+    def read(self):
+        recs = _decode_log_group(
+            self.log_groups, self.visible, self.record_key,
+            self.precombine, self.part_cols,
         )
-        arrays = [
-            pa.array(["insert"] * n_rows, type=pa.string()),
-            key,
-            pa.array([part.instant] * n_rows, type=pa.string()),
-        ]
-        for name in part.field_names:
-            atype = to_arrow_type(part.types[name])
-            if name in have:
-                arrays.append(
-                    batch.column(data_cols.index(name)).cast(atype)
-                )
-            else:
-                arrays.append(pa.nulls(n_rows, type=atype))
-        yield pa.RecordBatch.from_arrays(
-            arrays, names=_CDC_COLS + part.field_names
+        if not recs:
+            return
+        yield _payloads_to_arrow(
+            [r[6] for r in recs],
+            self.fields,
+            prefix=[
+                (
+                    "_change_type",
+                    [
+                        "delete" if r[0] == "d" else "update_postimage"
+                        for r in recs
+                    ],
+                ),
+                ("_change_key", [r[4] for r in recs]),
+                ("_commit_instant", [r[1] for r in recs]),
+            ],
         )
 
 
-class _HudiLiteStreamReader(DataSourceStreamReader):
+class _HudiLiteStreamReader(LiteStreamReader):
+    offset_key, offset_type = "instant", str
+
     def __init__(self, path: str, starting_instant: str | None,
                  cdc: bool = False):
-        self.path = path
-        self.starting_instant = starting_instant
+        super().__init__(path, starting_instant)
         self.cdc = cdc
 
-    def initialOffset(self):
-        return {"instant": self.starting_instant or "0"}
+    def initial(self):
+        return self.start or "0"
 
-    def latestOffset(self):
+    def latest(self):
         from dataset_grouper_spark.sources.hudi import _completed
 
         try:
             commits = _completed(self.path)
         except FileNotFoundError:
-            return {"instant": "0"}
-        return {"instant": max(commits) if commits else "0"}
+            return "0"
+        return max(commits) if commits else "0"
 
-    def partitions(self, start, end):
+    def files_between(self, lo, hi):
         from dataset_grouper_spark.sources.hudi import (
             _completed,
             _group_log_paths,
-            _precombine_col,
-            _table_props,
         )
 
-        lo, hi = str(start["instant"]), str(end["instant"])
-        if hi <= lo:
-            return [None]
         commits = _completed(self.path, as_of=hi)
-        struct = _table_schema(self.path)
-        field_names = [f.name for f in struct.fields]
-        types = {f.name: f.dataType for f in struct.fields}
-        props = _table_props(self.path)
-        record_key = props["hoodie.table.recordkey.fields"]
-        part_cols = (
-            props.get("hoodie.table.partition.fields", "").split(",")
-            if props.get("hoodie.table.partition.fields")
-            else []
-        )
-        precombine = _precombine_col(props, field_names)
+        fields, record_key, part_cols, precombine = _read_conf(self.path)
+        # CDC base files surface as 'insert' rows keyed by their own
+        # _hoodie_record_key column
+        cdc_fields = [(c, StringType()) for c in _CDC_COLS] + fields
         parts: list = []
         for ts in sorted(commits):
             if ts <= lo:
@@ -656,36 +538,23 @@ class _HudiLiteStreamReader(DataSourceStreamReader):
                 )
             for p in base_paths:
                 parts.append(
-                    _InsertFilePartition(p, field_names, types, ts)
+                    FilePartition(
+                        p,
+                        cdc_fields,
+                        {"_change_type": "insert", "_commit_instant": ts},
+                        {"_change_key": "_hoodie_record_key"},
+                    )
                     if self.cdc
-                    else _FilePartition(p, field_names, types)
+                    else FilePartition(p, fields)
                 )
             for group in _group_log_paths(log_paths):
                 parts.append(
                     _LogChangePartition(
                         [group], {ts}, record_key, precombine,
-                        part_cols, field_names, types,
+                        part_cols, fields,
                     )
                 )
-        return parts or [None]
-
-    def read(self, partition):
-        if partition is None:
-            return iter(())
-        if isinstance(partition, _LogChangePartition):
-            return _read_log_changes(partition)
-        if isinstance(partition, _InsertFilePartition):
-            return _read_insert_file_cdc(partition)
-        return _read_file_as_arrow(partition)
-
-    def commit(self, end):
-        pass  # offsets live in Spark's own checkpoint
-
-
-class _HudiWriteMessage(WriterCommitMessage):
-    def __init__(self, files: list[tuple] | None = None):
-        # (abs_path, rel_path, partition_rel, nrows, size, token)
-        self.files = files or []
+        return parts
 
 
 def _hudi_stage_write(path, iterator, record_key, part_cols):
@@ -700,97 +569,67 @@ def _hudi_stage_write(path, iterator, record_key, part_cols):
     Consequence, stated honestly: the row-level _hoodie_commit_time
     in files written through this path carries the staging token, not
     the final instant — the timeline/file name is authoritative (and
-    is what every read path here resolves slices by)."""
+    is what every read path here resolves slices by). Each staged
+    file carries ``(rel, partition path, nrows, size, token)``."""
     import uuid
 
     import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
     token = "0" + f"{uuid.uuid4().int % 10**16:016d}"
-    instant = token
-    files = []
-    writers = {}
+    names: dict[str, str] = {}  # partition path -> staged file name
+
+    def _name(part_rel):
+        if part_rel not in names:
+            names[part_rel] = f"{uuid.uuid4().hex[:20]}_0-0-0_{token}.parquet"
+            dst_dir = os.path.join(path, part_rel)
+            _fs.makedirs(dst_dir)
+            pmeta = os.path.join(dst_dir, ".hoodie_partition_metadata")
+            if part_rel and not _fs.exists(pmeta):
+                _fs.write_text(
+                    pmeta,
+                    f"#partition metadata\ncommitTime={token}\n"
+                    f"partitionDepth={len(part_cols)}\n",
+                )
+        return names[part_rel]
+
+    staged = StagedFiles(lambda part_rel: os.path.join(path, part_rel, names[part_rel]))
     for batch in iterator:
-        tbl = pa.Table.from_batches([batch])
-        # partition-path values via Arrow string cast — pandas would
-        # coerce NULL-carrying int columns to float64 and the dir name
-        # ('c=2.0') would diverge from the Spark-cast identity
-        # hudi_upsert computes ('c=2')
-        keys = (
-            pa.table(
-                [tbl.column(c).cast(pa.string()) for c in part_cols],
-                names=list(part_cols),
-            ).to_pandas()
-            if part_cols
-            else None
-        )
+        # partition-path values are the Arrow string cast — the
+        # identity hudi_upsert computes Spark-side ('c=2', never
+        # pandas' 'c=2.0'). A NULL value keeps the 'c=nan' directory
+        # earlier writes produced, so appends stay in one partition
         groups = (
-            keys.groupby(part_cols, dropna=False, sort=False).indices.items()
-            if part_cols
-            else [((), range(tbl.num_rows))]
+            split_partitions(batch, part_cols) if part_cols else [((), None)]
         )
         for tup, idx in groups:
-            if part_cols and len(part_cols) == 1:
-                tup = (tup,)
             part_rel = "/".join(
-                f"{c}={v}" for c, v in zip(part_cols, tup)
+                f"{c}={'nan' if v is None else v}"
+                for c, v in zip(part_cols, tup)
             )
-            if part_rel not in writers:
-                fid = uuid.uuid4().hex[:20]
-                name = f"{fid}_0-0-0_{instant}.parquet"
-                rel = os.path.join(part_rel, name) if part_rel else name
-                dst_dir = (
-                    os.path.join(path, part_rel) if part_rel else path
-                )
-                _fs.makedirs(dst_dir)
-                if part_rel:
-                    pmeta = os.path.join(
-                        dst_dir, ".hoodie_partition_metadata"
-                    )
-                    if not _fs.exists(pmeta):
-                        _fs.write_text(
-                            pmeta,
-                            f"#partition metadata\ncommitTime="
-                            f"{instant}\npartitionDepth="
-                            f"{len(part_cols)}\n",
-                        )
-                writers[part_rel] = [None, os.path.join(path, rel), rel, 0, name]
-            sliced = tbl.take(list(idx))
-            n = sliced.num_rows
-            key_arr = pc.cast(sliced.column(record_key), pa.string())
-            meta_arrays = [
-                pa.array([instant] * n),
-                pa.array([f"{instant}_0"] * n),
-                key_arr,
-                pa.array([part_rel] * n),
-                pa.array([writers[part_rel][4]] * n),
-            ]
-            meta_names = [
-                "_hoodie_commit_time",
-                "_hoodie_commit_seqno",
-                "_hoodie_record_key",
-                "_hoodie_partition_path",
-                "_hoodie_file_name",
-            ]
-            full = pa.table(
-                meta_arrays + [sliced.column(c) for c in sliced.column_names],
-                names=meta_names + list(sliced.column_names),
+            rows = batch if idx is None else batch.take(idx)
+            n = rows.num_rows
+            meta = {
+                "_hoodie_commit_time": pa.array([token] * n),
+                "_hoodie_commit_seqno": pa.array([f"{token}_0"] * n),
+                "_hoodie_record_key": rows.column(record_key).cast(
+                    pa.string()
+                ),
+                "_hoodie_partition_path": pa.array([part_rel] * n),
+                "_hoodie_file_name": pa.array([_name(part_rel)] * n),
+            }
+            staged.write(
+                part_rel,
+                pa.RecordBatch.from_arrays(
+                    list(meta.values()) + rows.columns,
+                    names=list(meta) + rows.schema.names,
+                ),
             )
-            if writers[part_rel][0] is None:
-                writers[part_rel][0] = pq.ParquetWriter(
-                    _fs.open_write(writers[part_rel][1]), full.schema
-                )
-            writers[part_rel][0].write_table(full)
-            writers[part_rel][3] += n
-    for part_rel, (w, dst, rel, nrows, _name) in writers.items():
-        if w is None:
-            continue
-        w.close()
-        files.append(
-            (dst, rel, part_rel, nrows, _fs.file_size(dst), token)
-        )
-    return _HudiWriteMessage(files)
+    files = [
+        (dst, os.path.join(part_rel, names[part_rel]), part_rel, nrows,
+         _fs.file_size(dst), token)
+        for part_rel, dst, nrows in staged.close()
+    ]
+    return StagedMessage(files)
 
 
 def _finalize_files(path, messages, instant):
@@ -818,7 +657,9 @@ def _finalize_files(path, messages, instant):
     return stats
 
 
-class _HudiLiteArrowWriter(DataSourceArrowWriter):
+class _HudiLiteArrowWriter(LiteWriter):
+    label = "hudi_lite write"
+
     def __init__(
         self,
         path: str,
@@ -827,19 +668,11 @@ class _HudiLiteArrowWriter(DataSourceArrowWriter):
         record_key: str,
         part_cols: list[str],
     ):
-        self.path = os.path.abspath(path)
-        self.overwrite = overwrite
-        self.schema = schema
+        super().__init__(path, overwrite, schema, part_cols)
         self.record_key = record_key
-        self.part_cols = list(part_cols)
         if record_key not in schema.names:
             raise ValueError(
                 f"hudi_lite write: recordKey {record_key!r} not in frame"
-            )
-        missing = [c for c in self.part_cols if c not in schema.names]
-        if missing:
-            raise ValueError(
-                f"hudi_lite write: partition columns {missing} not in frame"
             )
 
     def write(self, iterator):
@@ -847,99 +680,60 @@ class _HudiLiteArrowWriter(DataSourceArrowWriter):
             self.path, iterator, self.record_key, self.part_cols
         )
 
-    def _cleanup(self, messages):
-        for m in messages:
-            if m is None:
-                continue
-            for dst, _rel, _p, _n, _s, _t in m.files:
-                try:
-                    _fs.remove(dst)
-                except (OSError, FileNotFoundError):
-                    pass
-
-    def abort(self, messages):
-        self._cleanup(messages)
-
-    def commit(self, messages, extra_meta=None):
+    def _commit(self, messages, extra_meta=None):
         from dataset_grouper_spark.sources.hudi import (
-            _commit,
             _hoodie_path,
+            _next_instant,
+            _partition_fields,
             _table_props,
             _write_properties,
             hudi_file_slices,
         )
 
         _fs.makedirs(self.path)
-        existed = _fs.exists(
-            os.path.join(_hoodie_path(self.path), "hoodie.properties")
-        )
+        hp = _hoodie_path(self.path)
+        existed = _fs.exists(os.path.join(hp, "hoodie.properties"))
         if existed:
             props = _table_props(self.path)
             want = props.get("hoodie.table.recordkey.fields")
             if want and want != self.record_key:
-                self._cleanup(messages)
                 raise ValueError(
                     f"hudi_lite write: recordKey mismatch — table has "
                     f"{want!r}"
                 )
-            have_parts = (
-                props.get("hoodie.table.partition.fields", "").split(",")
-                if props.get("hoodie.table.partition.fields")
-                else []
-            )
+            have_parts = _partition_fields(props)
             if have_parts != self.part_cols:
-                self._cleanup(messages)
                 raise ValueError(
                     f"hudi_lite write: partition fields mismatch — table "
                     f"has {have_parts}, write declared {self.part_cols}"
                 )
         _write_properties(self.path, self.record_key, self.part_cols)
-        from dataset_grouper_spark.sources.hudi import _next_instant
-
         instant = _next_instant(self.path)
         stats = _finalize_files(self.path, messages, instant)
+        body = {"partitionToWriteStats": stats}
+        action = "commit"
+        if self.overwrite and existed:
+            # insert_overwrite_table: one replacecommit replacing
+            # every live file group, new files in the same instant
+            replaced: dict[str, list[str]] = {}
+            for part, fid, _i, _p in hudi_file_slices(self.path):
+                replaced.setdefault(part, []).append(fid)
+            action = "replacecommit"
+            body["partitionToReplaceFileIds"] = replaced
+            body["operationType"] = "INSERT_OVERWRITE_TABLE"
+        else:
+            body["operationType"] = "INSERT"
+        if extra_meta:
+            body["extraMetadata"] = extra_meta
         try:
-            if self.overwrite and existed:
-                # insert_overwrite_table: one replacecommit replacing
-                # every live file group, new files in the same instant
-                replaced: dict[str, list[str]] = {}
-                for part, fid, _i, _p in hudi_file_slices(self.path):
-                    replaced.setdefault(part, []).append(fid)
-                hp = _hoodie_path(self.path)
-                for suffix in (
-                    "replacecommit.requested",
-                    "replacecommit.inflight",
-                ):
-                    _fs.write_text(
-                        os.path.join(hp, f"{instant}.{suffix}"), "{}"
-                    )
-                body = {
-                    "partitionToWriteStats": stats,
-                    "partitionToReplaceFileIds": replaced,
-                    "operationType": "INSERT_OVERWRITE_TABLE",
-                }
-                if extra_meta:
-                    body["extraMetadata"] = extra_meta
-                with _fs.open_create(
-                    os.path.join(hp, f"{instant}.replacecommit")
-                ) as f:
-                    f.write(json.dumps(body).encode())
-            else:
-                hp = _hoodie_path(self.path)
-                for suffix in ("commit.requested", "commit.inflight"):
-                    _fs.write_text(
-                        os.path.join(hp, f"{instant}.{suffix}"), "{}"
-                    )
-                body = {
-                    "partitionToWriteStats": stats,
-                    "operationType": "INSERT",
-                }
-                if extra_meta:
-                    body["extraMetadata"] = extra_meta
-                with _fs.open_create(
-                    os.path.join(hp, f"{instant}.commit")
-                ) as f:
-                    f.write(json.dumps(body).encode())
+            for suffix in ("requested", "inflight"):
+                _fs.write_text(
+                    os.path.join(hp, f"{instant}.{action}.{suffix}"), "{}"
+                )
+            with _fs.open_create(
+                os.path.join(hp, f"{instant}.{action}")
+            ) as f:
+                f.write(json.dumps(body).encode())
         except FileExistsError:
             # a racer claimed this instant: our files were already
             # RENAMED into it, and files carrying a completed instant
@@ -949,7 +743,7 @@ class _HudiLiteArrowWriter(DataSourceArrowWriter):
                 for st in flist:
                     try:
                         _fs.remove(os.path.join(self.path, st["path"]))
-                    except (OSError, FileNotFoundError):
+                    except OSError:
                         pass
             raise RuntimeError(
                 f"hudi_lite write: lost the commit race at instant "
@@ -957,7 +751,7 @@ class _HudiLiteArrowWriter(DataSourceArrowWriter):
             )
 
 
-class _HudiLiteStreamArrowWriter(_HudiLiteArrowWriter, DataSourceStreamArrowWriter):
+class _HudiLiteStreamArrowWriter(LiteStreamWriter, _HudiLiteArrowWriter):
     """Streaming sink: each micro-batch is one INSERT commit whose
     ``extraMetadata`` carries ``{app-id, epoch=batchId}`` — a replayed
     batch (epoch <= the app's last committed) no-ops with cleanup."""
@@ -966,7 +760,7 @@ class _HudiLiteStreamArrowWriter(_HudiLiteArrowWriter, DataSourceStreamArrowWrit
         super().__init__(path, False, schema, record_key, part_cols)
         self.app_id = app_id
 
-    def _last_epoch(self):
+    def last_epoch(self):
         from dataset_grouper_spark.sources.hudi import _completed
 
         try:
@@ -981,23 +775,15 @@ class _HudiLiteStreamArrowWriter(_HudiLiteArrowWriter, DataSourceStreamArrowWrit
                 best = e if best is None else max(best, e)
         return best
 
-    def commit(self, messages, batchId):
-        last = self._last_epoch()
-        if last is not None and batchId <= last:
-            self._cleanup(messages)  # replayed epoch: no-op
-            return
+    def commit_epoch(self, messages, batch_id):
         # the real instant is claimed (and staged files renamed into
         # it) inside the base commit — fresh per micro-batch
-        super().commit(
-            messages,
-            extra_meta={"app-id": self.app_id, "epoch": int(batchId)},
+        self._commit_or_cleanup(
+            messages, extra_meta={"app-id": self.app_id, "epoch": batch_id}
         )
 
-    def abort(self, messages, batchId):
-        self._cleanup(messages)
 
-
-class HudiLiteDataSource(DataSource):
+class HudiLiteDataSource(LiteDataSource):
     """``spark.dataSource.register(HudiLiteDataSource)`` then
     ``.format("hudi_lite").option("path", table_path)``. Options:
     ``path`` (required), ``recordKey`` (write; default the table's, or
@@ -1006,15 +792,11 @@ class HudiLiteDataSource(DataSource):
     ``append`` default / ``cdc`` for MoR change streams), ``epochAppId``
     (stream write)."""
 
+    batch_reader = _HudiLiteBatchReader
+
     @classmethod
     def name(cls):
         return "hudi_lite"
-
-    def _path(self) -> str:
-        p = self.options.get("path")
-        if not p:
-            raise ValueError("hudi_lite: option 'path' is required")
-        return p
 
     def _mode(self) -> str:
         m = (self.options.get("mode") or "append").lower()
@@ -1027,8 +809,6 @@ class HudiLiteDataSource(DataSource):
     def schema(self):
         struct = _table_schema(self._path())
         if self._mode() == "cdc":
-            from pyspark.sql.types import StringType, StructField
-
             return StructType(
                 [StructField(c, StringType(), True) for c in _CDC_COLS]
                 + list(struct.fields)
@@ -1041,7 +821,7 @@ class HudiLiteDataSource(DataSource):
                 "hudi_lite: mode=cdc is a STREAMING read option; for "
                 "batch CDC use sources.hudi.read_hudi_changes"
             )
-        return _HudiLiteBatchReader(self._path())
+        return super().reader(schema)
 
     def streamReader(self, schema):
         return _HudiLiteStreamReader(
@@ -1051,15 +831,13 @@ class HudiLiteDataSource(DataSource):
         )
 
     def _write_conf(self, schema):
-        from dataset_grouper_spark.sources.hudi import _table_props
+        from dataset_grouper_spark.sources.hudi import (
+            _partition_fields,
+            _table_props,
+        )
 
         opt_key = self.options.get("recordKey")
-        opt_parts = self.options.get("partitionBy")
-        declared = (
-            [c.strip() for c in opt_parts.split(",") if c.strip()]
-            if opt_parts
-            else []
-        )
+        declared = self._partition_by()
         try:
             props = _table_props(self._path())
         except (FileNotFoundError, OSError):
@@ -1073,11 +851,7 @@ class HudiLiteDataSource(DataSource):
                 f"contradicts the table's record key {table_key!r}"
             )
         key = table_key or opt_key
-        table_parts = (
-            props.get("hoodie.table.partition.fields", "").split(",")
-            if props.get("hoodie.table.partition.fields")
-            else []
-        )
+        table_parts = _partition_fields(props)
         if declared and declared != table_parts:
             raise ValueError(
                 f"hudi_lite write: partitionBy option {declared} "

@@ -36,14 +36,18 @@ from __future__ import annotations
 import os
 
 from dataset_grouper_spark.compat import fs as _fs
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    DataSourceStreamArrowWriter,
-    DataSourceStreamReader,
-    InputPartition,
-    WriterCommitMessage,
+from dataset_grouper_spark.streaming._lite import (
+    FilePartition,
+    LiteBatchReader,
+    LiteDataSource,
+    LiteStreamReader,
+    LiteStreamWriter,
+    LiteWriter,
+    PushFilters,
+    StagedFiles,
+    StagedMessage,
+    fields_of,
+    split_partitions,
 )
 from pyspark.sql.types import (
     BinaryType,
@@ -98,36 +102,6 @@ def _struct_from_iceberg(fields: list[dict]) -> StructType:
     return StructType(out)
 
 
-class _FilePartition(InputPartition):
-    def __init__(self, path, field_names, types):
-        self.path = path
-        self.field_names = field_names  # schema order
-        self.types = types  # name -> pyspark DataType (picklable)
-
-
-def _read_file_as_arrow(part):
-    """Executor-side decode: one parquet file -> Arrow batches in
-    schema column order; columns the file predates backfill NULL."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    pf = pq.ParquetFile(part.path)
-    have = set(pf.schema_arrow.names)
-    data_cols = [n for n in part.field_names if n in have]
-    for batch in pf.iter_batches(columns=data_cols):
-        n_rows = batch.num_rows
-        arrays = []
-        for name in part.field_names:
-            atype = to_arrow_type(part.types[name])
-            if name in have:
-                arrays.append(batch.column(data_cols.index(name)).cast(atype))
-            else:
-                arrays.append(pa.nulls(n_rows, type=atype))
-        yield pa.RecordBatch.from_arrays(arrays, names=part.field_names)
-
-
 def _table_state(path: str):
     """(meta, current schema dict, StructType) — shared planning read."""
     from dataset_grouper_spark.sources.iceberg import _load_metadata
@@ -147,116 +121,26 @@ def _table_state(path: str):
     return meta, schema, _struct_from_iceberg(schema["fields"])
 
 
-def _partitions_for(paths, struct):
-    field_names = [f.name for f in struct.fields]
-    types = {f.name: f.dataType for f in struct.fields}
-    return [_FilePartition(p, field_names, types) for p in paths]
+def _default_spec_fields(meta: dict) -> list[dict]:
+    spec = next(
+        (
+            s
+            for s in meta.get("partition-specs") or []
+            if s.get("spec-id") == meta.get("default-spec-id", 0)
+        ),
+        {"fields": []},
+    )
+    return spec.get("fields") or []
 
 
-class _IcebergLiteBatchReader(DataSourceReader):
-    def __init__(self, path: str):
-        self.path = path
-
-    def partitions(self):
-        from dataset_grouper_spark.sources.iceberg import _live_files
-
-        meta, _schema, struct = _table_state(self.path)
-        cur = meta.get("current-snapshot-id")
-        if cur is None:
-            return [None]
-        snap = next(
-            s for s in meta["snapshots"] if s["snapshot-id"] == cur
-        )
-        data, delete_files, _rows, eq = _live_files(self.path, snap)
-        # RuntimeError, not NotImplementedError: the DSv2 wrapper
-        # treats NotImplementedError from partitions() as "no
-        # partitioning support" and silently falls back
-        if delete_files or eq:
-            raise RuntimeError(
-                "iceberg_lite batch read: table carries merge-on-read "
-                "delete files — use sources.iceberg.read_iceberg (the "
-                "DataFrame path applies the delete anti-joins)"
-            )
-        parts = _partitions_for([p for p, _s in data], struct)
-        return parts or [None]
-
-    def read(self, partition):
-        if partition is None:
-            return iter(())
-        return _read_file_as_arrow(partition)
-
-
-class _IcebergLitePushdownReader(_IcebergLiteBatchReader):
-    """Pushdown-capable variant, OPT-IN via
-    ``.option("pushdown", "true")`` — comparison/IN filters on
-    top-level columns feed the manifest bounds skipper (Iceberg
-    Appendix-D lower/upper envelopes in ``_live_files``), so
-    ``spark.read.format("iceberg_lite")....filter("id < k")`` plans
-    only candidate files. Skipping is never exact, so EVERY filter is
-    returned for Spark to re-evaluate row-level.
-
-    WHY OPT-IN — the same verified Spark 4.1 wrapper hazard as
-    delta_lite (see _DeltaLitePushdownReader): the JVM's
-    PythonDataSourceV2 keeps ONE mutable readInfo slot per load()
-    relation; pushFilters overwrites it, and a later plan on the SAME
-    relation with no translatable filters reuses the slot WITHOUT
-    re-invoking Python (pushdownFiltersInPython gates the runner on
-    isAnyFilterSupported). Rule when opting in: ONE load() per query.
-    """
-
-    def __init__(self, path: str):
-        super().__init__(path)
-        self.skip_filters: list[tuple[str, str, object]] = []
-
-    def pushFilters(self, filters):
-        from pyspark.sql.datasource import (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            In,
-            LessThan,
-            LessThanOrEqual,
-        )
-
-        ops = {
-            EqualTo: "=",
-            LessThan: "<",
-            LessThanOrEqual: "<=",
-            GreaterThan: ">",
-            GreaterThanOrEqual: ">=",
-        }
-        for f in filters:
-            op = ops.get(type(f))
-            if (
-                op is not None
-                and len(f.attribute) == 1
-                and f.value is not None
-            ):
-                self.skip_filters.append((f.attribute[0], op, f.value))
-            elif (
-                isinstance(f, In)
-                and len(f.attribute) == 1
-                and f.value
-                and all(v is not None for v in f.value)
-            ):
-                # IN ⊆ [min, max] envelope: sound, still prunes
-                self.skip_filters.append(
-                    (f.attribute[0], ">=", min(f.value))
-                )
-                self.skip_filters.append(
-                    (f.attribute[0], "<=", max(f.value))
-                )
-            yield f  # Spark always re-evaluates: skipping is file-level
-
-    def partitions(self):
-        if not self.skip_filters:
-            return super().partitions()
+class _IcebergLiteBatchReader(LiteBatchReader):
+    def plan(self):
         from dataset_grouper_spark.sources.iceberg import _live_files
 
         meta, schema, struct = _table_state(self.path)
         cur = meta.get("current-snapshot-id")
         if cur is None:
-            return [None]
+            return []
         snap = next(
             s for s in meta["snapshots"] if s["snapshot-id"] == cur
         )
@@ -271,50 +155,53 @@ class _IcebergLitePushdownReader(_IcebergLiteBatchReader):
         data, delete_files, _rows, eq = _live_files(
             self.path, snap, None, skip or None, field_types
         )
+        # RuntimeError, not NotImplementedError: the DSv2 wrapper
+        # treats NotImplementedError from partitions() as "no
+        # partitioning support" and silently falls back
         if delete_files or eq:
             raise RuntimeError(
                 "iceberg_lite batch read: table carries merge-on-read "
                 "delete files — use sources.iceberg.read_iceberg (the "
                 "DataFrame path applies the delete anti-joins)"
             )
-        parts = _partitions_for([p for p, _s in data], struct)
-        return parts or [None]
+        fields = fields_of(struct)
+        return [FilePartition(p, fields) for p, _s in data]
 
 
-class _IcebergLiteStreamReader(DataSourceStreamReader):
-    def __init__(self, path: str, starting_sequence: int | None):
-        self.path = path
-        self.starting_sequence = starting_sequence
+class _IcebergLitePushdownReader(PushFilters, _IcebergLiteBatchReader):
+    """Opt-in pushdown (see :class:`PushFilters` for why it is not the
+    default): comparison/IN filters on top-level columns feed the
+    manifest bounds skipper (Iceberg Appendix-D lower/upper envelopes
+    in ``_live_files``), so ``spark.read.format("iceberg_lite")....
+    filter("id < k")`` plans only candidate files."""
 
-    def initialOffset(self):
-        if self.starting_sequence is not None:
-            return {"sequence": int(self.starting_sequence) - 1}
-        return {"sequence": 0}
 
-    def latestOffset(self):
+class _IcebergLiteStreamReader(LiteStreamReader):
+    offset_key, offset_type = "sequence", int
+
+    def initial(self):
+        return 0 if self.start is None else self.start - 1
+
+    def latest(self):
         from dataset_grouper_spark.sources.iceberg import _load_metadata
 
         try:
             meta = _load_metadata(self.path)
         except FileNotFoundError:
-            return {"sequence": 0}
-        return {"sequence": int(meta.get("last-sequence-number") or 0)}
+            return 0
+        return int(meta.get("last-sequence-number") or 0)
 
-    def partitions(self, start, end):
+    def files_between(self, lo, hi):
         from dataset_grouper_spark.sources.iceberg import (
             _added_data_files,
             _load_metadata,
             _snapshots_by_sequence,
         )
 
-        lo, hi = int(start["sequence"]), int(end["sequence"])
-        if hi <= lo:
-            return [None]
         meta = _load_metadata(self.path)
-        snaps = _snapshots_by_sequence(meta)
         want = [
             s
-            for s in snaps
+            for s in _snapshots_by_sequence(meta)
             if lo < int(s.get("sequence-number") or 0) <= hi
         ]
         have = [int(s.get("sequence-number") or 0) for s in want]
@@ -325,155 +212,83 @@ class _IcebergLiteStreamReader(DataSourceStreamReader):
                 "from a newer startingSequence)"
             )
         _m, _schema, struct = _table_state(self.path)
-        paths = []
+        fields = fields_of(struct)
+        parts = []
         for s in want:
             if (s.get("summary") or {}).get("operation") == "replace":
                 continue  # compaction: no logical change
-            paths.extend(
-                _added_data_files(self.path, s, "iceberg_lite stream")
-            )
-        return _partitions_for(paths, struct) or [None]
-
-    def read(self, partition):
-        if partition is None:
-            return iter(())
-        return _read_file_as_arrow(partition)
-
-    def commit(self, end):
-        pass  # offsets live in Spark's own checkpoint
-
-
-class _IceWriteMessage(WriterCommitMessage):
-    """One per task. ``files`` lists
-    (path, size, nrows, partition_struct_or_None) for every parquet
-    file the task staged — one per distinct partition tuple it saw
-    (one total when unpartitioned)."""
-
-    def __init__(self, files: list[tuple] | None = None):
-        self.files = files or []
+            for p in _added_data_files(self.path, s, "iceberg_lite stream"):
+                parts.append(FilePartition(p, fields))
+        return parts
 
 
 def _ice_write_task_files(table_path, iterator, part_cols, transforms=None):
     """Executor-side staging for the iceberg_lite writers: one parquet
-    file per distinct partition tuple per task (Iceberg data files
-    KEEP partition columns — only the manifest's partition struct
-    makes pruning work). Upstream should repartition by the partition
-    columns so a task sees few distinct tuples.
+    file per distinct partition tuple per task under ``<table>/data``
+    (Iceberg data files KEEP partition columns — only the manifest's
+    partition struct makes pruning work). Each staged file carries
+    ``(size, nrows, partition struct or None)``. Upstream should
+    repartition by the partition columns so a task sees few distinct
+    tuples.
 
-    ``transforms`` (r13, VERDICT r12 task 3) routes NON-IDENTITY
-    specs through the format API: a list of ``(spec_field_name,
-    source_col, transform, src_type)`` — each row's partition value
-    comes from the same ``_transform_value`` the read-side pruning
-    uses (spec murmur3 for bucket[N], truncate[W], date transforms),
-    so files group by TRANSFORMED value and the manifest carries the
-    exact struct ``iceberg_append(partition_spec=...)`` would
-    commit."""
+    ``transforms`` routes NON-IDENTITY specs through the format API: a
+    list of ``(spec_field_name, source_col, transform, src_type)`` —
+    each row's partition value comes from the same
+    ``_transform_value`` the read-side pruning uses (spec murmur3 for
+    bucket[N], truncate[W], date transforms), so files group by
+    TRANSFORMED value and the manifest carries the exact struct
+    ``iceberg_append(partition_spec=...)`` would commit."""
     import uuid
 
-    import pyarrow.parquet as pq
+    import pyarrow as pa
 
     ddir = os.path.join(table_path, "data")
     _fs.makedirs(ddir)
+    staged = StagedFiles(
+        lambda _key: os.path.join(ddir, f"w-{uuid.uuid4().hex}.parquet")
+    )
     if transforms:
-        import pandas as pd
-
-        from dataset_grouper_spark.sources.iceberg import (
-            _transform_value,
-        )
-
-        names = [t[0] for t in transforms]
-        writers: dict[tuple, list] = {}
-        for batch in iterator:
-            tvals = {}
-            for name, src, tr, st in transforms:
-                vals = batch.column(src).to_pylist()
-                tvals[name] = [_transform_value(tr, v, st) for v in vals]
-            key_df = pd.DataFrame(
+        from dataset_grouper_spark.sources.iceberg import _transform_value
+    parts: dict[tuple, dict | None] = {}  # partition key -> struct
+    for batch in iterator:
+        if not (transforms or part_cols):
+            parts[()] = None
+            staged.write((), batch)
+            continue
+        tvals = None
+        if transforms:
+            tvals = {
+                name: [
+                    _transform_value(tr, v, st)
+                    for v in batch.column(src).to_pylist()
+                ]
+                for name, src, tr, st in transforms
+            }
+            keys = pa.record_batch(
                 {
-                    n: pd.Series(
-                        [None if v is None else str(v) for v in tvals[n]],
-                        dtype=object,
+                    n: pa.array(
+                        [None if v is None else str(v) for v in vals],
+                        type=pa.string(),
                     )
-                    for n in names
+                    for n, vals in tvals.items()
                 }
             )
-            groups = key_df.groupby(names, dropna=False, sort=False)
-            for _tup, idx in groups.indices.items():
-                first = int(idx[0])
-                part = {n: tvals[n][first] for n in names}
-                k = tuple(sorted(part.items(), key=lambda kv: kv[0]))
-                sliced = batch.take(idx)
-                if k not in writers:
-                    dst = os.path.join(
-                        ddir, f"w-{uuid.uuid4().hex}.parquet"
-                    )
-                    w = pq.ParquetWriter(
-                        _fs.open_write(dst), sliced.schema
-                    )
-                    writers[k] = [w, dst, 0, part]
-                writers[k][0].write_batch(sliced)
-                writers[k][2] += sliced.num_rows
-        if not writers:
-            return _IceWriteMessage()
-        files = []
-        for w, dst, nrows, part in writers.values():
-            w.close()
-            files.append((dst, _fs.file_size(dst), nrows, part))
-        return _IceWriteMessage(files)
-    if not part_cols:
-        dst = os.path.join(ddir, f"w-{uuid.uuid4().hex}.parquet")
-        writer, nrows = None, 0
-        for batch in iterator:
-            if writer is None:
-                writer = pq.ParquetWriter(_fs.open_write(dst), batch.schema)
-            writer.write_batch(batch)
-            nrows += batch.num_rows
-        if writer is None:
-            return _IceWriteMessage()
-        writer.close()
-        return _IceWriteMessage(
-            [(dst, _fs.file_size(dst), nrows, None)]
-        )
-    import pyarrow as pa
-
-    writers: dict[tuple, list] = {}  # key -> [pq writer, dst, nrows, part]
-    for batch in iterator:
-        # group on STRINGIFIED int keys (to_pandas coerces a NULL-
-        # carrying int column to float64 — ADVICE r7), but take the
-        # typed partition VALUES straight from the Arrow arrays
-        key_batch = batch.select(part_cols)
-        grp_arrays = []
-        for f in key_batch.schema:
-            col = key_batch.column(f.name)
-            if pa.types.is_integer(f.type):
-                col = col.cast(pa.string())
-            grp_arrays.append(col)
-        key_df = pa.RecordBatch.from_arrays(
-            grp_arrays, names=list(part_cols)
-        ).to_pandas()
-        groups = key_df.groupby(part_cols, dropna=False, sort=False)
-        for tup, idx in groups.indices.items():
-            if len(part_cols) == 1:
-                tup = (tup,)
-            first = int(idx[0])
-            part = {
-                c: key_batch.column(c)[first].as_py() for c in part_cols
-            }
-            k = tuple(sorted(part.items()))
-            sliced = batch.take(idx)
-            if k not in writers:
-                dst = os.path.join(ddir, f"w-{uuid.uuid4().hex}.parquet")
-                w = pq.ParquetWriter(_fs.open_write(dst), sliced.schema)
-                writers[k] = [w, dst, 0, part]
-            writers[k][0].write_batch(sliced)
-            writers[k][2] += sliced.num_rows
-    if not writers:
-        return _IceWriteMessage()
-    files = []
-    for w, dst, nrows, part in writers.values():
-        w.close()
-        files.append((dst, _fs.file_size(dst), nrows, part))
-    return _IceWriteMessage(files)
+        else:
+            keys = batch.select(part_cols)
+        for key, idx in split_partitions(keys, keys.schema.names):
+            if key not in parts:
+                i = idx[0].as_py()
+                parts[key] = {
+                    n: tvals[n][i] if tvals else keys.column(n)[i].as_py()
+                    for n in keys.schema.names
+                }
+            staged.write(key, batch.take(idx))
+    return StagedMessage(
+        [
+            (dst, _fs.file_size(dst), nrows, parts[key])
+            for key, dst, nrows in staged.close()
+        ]
+    )
 
 
 def _ice_schema_fields(schema: StructType) -> list[dict]:
@@ -490,14 +305,21 @@ def _ice_schema_fields(schema: StructType) -> list[dict]:
     ]
 
 
-class _IcebergLiteArrowWriter(DataSourceArrowWriter):
+def _has_metadata(path: str) -> bool:
+    mdir = os.path.join(path, "metadata")
+    return _fs.is_dir(mdir) and any(
+        n.endswith(".metadata.json") for n in _fs.listdir(mdir)
+    )
+
+
+class _IcebergLiteArrowWriter(LiteWriter):
     """Write half of ``iceberg_lite`` — spec-shaped snapshot commits
     through the Python data source API:
 
         df.write.format("iceberg_lite").mode("append")
           .option("path", t).save()
 
-    Each task streams its Arrow batches into ONE parquet file under
+    Each task streams its Arrow batches into parquet files under
     ``<table>/data`` (invisible until the snapshot commits), and the
     driver commit writes an Avro manifest with Appendix-D column
     bounds + a manifest list + the next metadata version (exclusive
@@ -510,15 +332,17 @@ class _IcebergLiteArrowWriter(DataSourceArrowWriter):
     Arrow columns, and NON-IDENTITY transforms (bucket[N] via the
     spec's murmur3, truncate[W], year/month/day/hour) compute each
     row's partition value task-side with the same ``_transform_value``
-    the read-side pruning uses (r13, VERDICT r12 task 3). A NEW table
-    is partitioned with ``.option("partitionBy", "a,b")`` (identity).
-    Data files keep the partition columns (Iceberg layout); each
-    manifest entry's ``partition`` struct carries the file's tuple,
-    which is what ``read_iceberg(partition_filter=...)`` prunes on.
+    the read-side pruning uses. A NEW table is partitioned with
+    ``.option("partitionBy", "a,b")`` (identity). Data files keep the
+    partition columns (Iceberg layout); each manifest entry's
+    ``partition`` struct carries the file's tuple, which is what
+    ``read_iceberg(partition_filter=...)`` prunes on.
 
     Honest gates: exact schema match on existing tables (evolution
     goes through ``iceberg_append(merge_schema=True)``); identity
     partition sources must be string/int/long."""
+
+    label = "iceberg_lite write"
 
     def __init__(
         self,
@@ -528,41 +352,16 @@ class _IcebergLiteArrowWriter(DataSourceArrowWriter):
         part_cols: list[str] | None = None,
         transforms: list[tuple] | None = None,
     ):
-        self.path = os.path.abspath(path)
-        self.overwrite = overwrite
-        self.schema = schema
-        self.part_cols = list(part_cols or [])
+        super().__init__(path, overwrite, schema, part_cols)
         # [(spec_field_name, source_col, transform, src_type)] when
         # the table's default spec has any non-identity field
         self.transforms = list(transforms or []) or None
-        missing = [c for c in self.part_cols if c not in schema.names]
-        if self.transforms:
-            missing += [
-                t[1] for t in self.transforms if t[1] not in schema.names
-            ]
-        if missing:
-            raise ValueError(
-                f"iceberg_lite write: partition columns {missing} not "
-                f"in the frame ({schema.names})"
-            )
+        self._require([t[1] for t in self.transforms or []])
 
     def write(self, iterator):
         return _ice_write_task_files(
             self.path, iterator, self.part_cols, self.transforms
         )
-
-    def _cleanup(self, messages):
-        for m in messages:
-            if m is None:
-                continue
-            for dst, _size, _nrows, _part in m.files:
-                try:
-                    _fs.remove(dst)
-                except (OSError, FileNotFoundError):
-                    pass
-
-    def abort(self, messages):
-        self._cleanup(messages)
 
     def _load_or_create_meta(self):
         import uuid
@@ -570,10 +369,7 @@ class _IcebergLiteArrowWriter(DataSourceArrowWriter):
         from dataset_grouper_spark.sources.iceberg import _load_metadata
 
         mdir = os.path.join(self.path, "metadata")
-        exists = _fs.is_dir(mdir) and any(
-            n.endswith(".metadata.json") for n in _fs.listdir(mdir)
-        )
-        if exists:
+        if _has_metadata(self.path):
             meta = _load_metadata(self.path)
             cur = next(
                 (
@@ -593,15 +389,7 @@ class _IcebergLiteArrowWriter(DataSourceArrowWriter):
                     f"iceberg_lite write: schema mismatch — table has "
                     f"{have}, frame maps to {want}"
                 )
-            spec = next(
-                (
-                    s
-                    for s in meta.get("partition-specs") or []
-                    if s.get("spec-id") == meta.get("default-spec-id", 0)
-                ),
-                {"fields": []},
-            )
-            spec_fields = spec.get("fields") or []
+            spec_fields = _default_spec_fields(meta)
             by_id = {f["id"]: f["name"] for f in cur["fields"]}
             if any(
                 f.get("transform", "identity") != "identity"
@@ -661,7 +449,10 @@ class _IcebergLiteArrowWriter(DataSourceArrowWriter):
         }
         return meta, schema_entry, spec_fields
 
-    def _commit_files(self, messages, summary=None, carry=None) -> int:
+    def _commit(self, messages, summary=None) -> int:
+        """One snapshot holding every staged file. ``overwrite``: the
+        new manifest list carries NOTHING over — replace-table
+        semantics, previous snapshots time-travel."""
         import uuid
 
         from dataset_grouper_spark.sources.avro import write_avro_file
@@ -672,6 +463,9 @@ class _IcebergLiteArrowWriter(DataSourceArrowWriter):
             _partition_manifest_schema,
         )
 
+        carry = None
+        if self.overwrite:
+            summary, carry = {"operation": "overwrite"}, set()
         meta, schema_entry, spec_fields = self._load_or_create_meta()
         manifest_schema = _MANIFEST_SCHEMA
         if spec_fields:
@@ -757,28 +551,15 @@ class _IcebergLiteArrowWriter(DataSourceArrowWriter):
             carry_content=carry,
         )
 
-    def commit(self, messages):
-        try:
-            # overwrite: the new manifest list carries NOTHING over —
-            # replace-table semantics, previous snapshots time-travel
-            self._commit_files(
-                messages,
-                summary={"operation": "overwrite"}
-                if self.overwrite
-                else None,
-                carry=set() if self.overwrite else None,
-            )
-        except Exception:
-            self._cleanup(messages)
-            raise
 
-
-class _IcebergLiteStreamArrowWriter(DataSourceStreamArrowWriter):
+class _IcebergLiteStreamArrowWriter(LiteStreamWriter, _IcebergLiteArrowWriter):
     """Streaming write half: ``df.writeStream.format("iceberg_lite")``
     — exactly-once via the epoch scheme `iceberg_append_epoch` uses:
     the snapshot summary carries ``{app-id, epoch=batchId}`` atomically
     with the commit and an append-only per-app ledger survives
     snapshot expiry; a replayed batch no-ops and removes its files."""
+
+    label = "iceberg_lite stream write"
 
     def __init__(
         self,
@@ -788,89 +569,46 @@ class _IcebergLiteStreamArrowWriter(DataSourceStreamArrowWriter):
         part_cols: list[str] | None = None,
         transforms: list[tuple] | None = None,
     ):
-        self.path = os.path.abspath(path)
-        self.schema = schema
+        super().__init__(path, False, schema, part_cols, transforms)
         self.app_id = app_id
-        self.overwrite = False
-        self.part_cols = list(part_cols or [])
-        self.transforms = list(transforms or []) or None
-        missing = [c for c in self.part_cols if c not in schema.names]
-        if self.transforms:
-            missing += [
-                t[1] for t in self.transforms if t[1] not in schema.names
-            ]
-        if missing:
-            raise ValueError(
-                f"iceberg_lite stream write: partition columns {missing} "
-                f"not in the frame ({schema.names})"
-            )
 
-    write = _IcebergLiteArrowWriter.write
-    _cleanup = _IcebergLiteArrowWriter._cleanup
-    _load_or_create_meta = _IcebergLiteArrowWriter._load_or_create_meta
-    _commit_files = _IcebergLiteArrowWriter._commit_files
+    def last_epoch(self):
+        from dataset_grouper_spark.sources.iceberg import iceberg_last_epoch
 
-    def commit(self, messages, batchId):
-        from dataset_grouper_spark.sources.iceberg import (
-            _epoch_ledger_path,
-            iceberg_last_epoch,
+        if not _has_metadata(self.path):
+            return None
+        return iceberg_last_epoch(self.path, self.app_id)
+
+    def commit_epoch(self, messages, batch_id):
+        from dataset_grouper_spark.sources.iceberg import _epoch_ledger_path
+
+        self._commit_or_cleanup(
+            messages, summary={"app-id": self.app_id, "epoch": batch_id}
         )
-
-        mdir = os.path.join(self.path, "metadata")
-        exists = _fs.is_dir(mdir) and any(
-            n.endswith(".metadata.json") for n in _fs.listdir(mdir)
-        )
-        if exists:
-            last = iceberg_last_epoch(self.path, self.app_id)
-            if last is not None and batchId <= last:
-                self._cleanup(messages)  # replayed epoch: no-op
-                return
-        try:
-            self._commit_files(
-                messages,
-                summary={"app-id": self.app_id, "epoch": int(batchId)},
-            )
-        except Exception:
-            self._cleanup(messages)
-            raise
         ledger = _epoch_ledger_path(self.path, self.app_id)
         # read-modify-write: object stores can't append; one live
         # writer per app_id is the stream checkpoint's contract
         prior = _fs.read_text(ledger) if _fs.exists(ledger) else ""
-        _fs.write_text(ledger, prior + f"{int(batchId)}\n")
-
-    def abort(self, messages, batchId):
-        self._cleanup(messages)
+        _fs.write_text(ledger, prior + f"{batch_id}\n")
 
 
-class IcebergLiteDataSource(DataSource):
+class IcebergLiteDataSource(LiteDataSource):
     """``spark.dataSource.register(IcebergLiteDataSource)`` then
     ``.format("iceberg_lite").option("path", table_path)``. Options:
     ``path`` (required), ``startingSequence`` (stream only — first
     data sequence number to consume; default 1, i.e. the whole table
     then the tail)."""
 
+    batch_reader = _IcebergLiteBatchReader
+    pushdown_reader = _IcebergLitePushdownReader
+
     @classmethod
     def name(cls):
         return "iceberg_lite"
 
-    def _path(self) -> str:
-        p = self.options.get("path")
-        if not p:
-            raise ValueError("iceberg_lite: option 'path' is required")
-        return p
-
     def schema(self):
         _m, _schema, struct = _table_state(self._path())
         return struct
-
-    def reader(self, schema):
-        # pushdown is OPT-IN: Spark 4.1's DSv2 wrapper caches ONE
-        # planned scan per relation and reuses it for plans with no
-        # translatable filters (see _IcebergLitePushdownReader)
-        if str(self.options.get("pushdown", "false")).lower() == "true":
-            return _IcebergLitePushdownReader(self._path())
-        return _IcebergLiteBatchReader(self._path())
 
     def _write_conf(self) -> tuple[list[str], list[tuple]]:
         """(identity partition source columns, transform list) for a
@@ -878,28 +616,17 @@ class IcebergLiteDataSource(DataSource):
         all-identity specs group straight off the frame columns;
         specs with any non-identity field resolve to
         ``(spec_name, source_col, transform, src_type)`` tuples the
-        write tasks evaluate via ``_transform_value`` (r13). A new
-        table takes ``.option("partitionBy", "a,b")`` (identity)."""
-        opt = self.options.get("partitionBy")
-        declared = (
-            [c.strip() for c in opt.split(",") if c.strip()] if opt else []
-        )
+        write tasks evaluate via ``_transform_value``. A new table
+        takes ``.option("partitionBy", "a,b")`` (identity)."""
+        declared = self._partition_by()
         try:
             meta, schema, _struct = _table_state(self._path())
         except (FileNotFoundError, OSError, ValueError):
             return declared, []
-        spec = next(
-            (
-                s
-                for s in meta.get("partition-specs") or []
-                if s.get("spec-id") == meta.get("default-spec-id", 0)
-            ),
-            {"fields": []},
-        )
         by_id = {
             f["id"]: (f["name"], f["type"]) for f in schema["fields"]
         }
-        spec_fields = spec.get("fields") or []
+        spec_fields = _default_spec_fields(meta)
         if any(
             f.get("transform", "identity") != "identity"
             for f in spec_fields

@@ -363,3 +363,24 @@ def test_table_format_sniff_on_mock_filesystem(mock_fs):
     fs.write_bytes("mock://fqt/data.parquet", b"PAR1")
     fs.write_bytes("mock://fqt/export.tar", b"x")
     assert sources.table_format("mock://fqt") == "parquet"
+
+
+@pytest.mark.parametrize(
+    "path, want",
+    [
+        ("file:/a", "/a"),
+        ("file:///a", "/a"),
+        ("/a", "/a"),
+        ("s3://b/k/x.parquet", "/b/k/x.parquet"),
+        ("hdfs://nn:8020/t/f", "/nn:8020/t/f"),
+    ],
+)
+def test_norm_path_twins_agree(spark, path, want):
+    """The Python normalizer and its Column twin map every spelling of
+    a file's location to the same join key."""
+    got = (
+        spark.createDataFrame([(path,)], "p string")
+        .select(fs.norm_path_col(F.col("p")).alias("n"))
+        .first()["n"]
+    )
+    assert fs.norm_path(path) == got == want

@@ -341,7 +341,7 @@ class TestMorStream:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120), "hudi_lite drain did not finish"
 
     def test_cdc_tail_matches_batch_changes(self, registered, tmp_path):
         """Tail a MoR table across an upsert + a delete block + a
@@ -440,7 +440,7 @@ class TestMorStream:
         )
         ckpt = str(tmp_path / "ck")
         with pytest.raises(Exception, match="append-only|cdc"):
-            self._drain(spark, t, ckpt, "morapp1")
+            self._drain(spark, t, ckpt, str(tmp_path / "morapp1"))
 
     def test_cdc_batch_read_rejected(self, registered, tmp_path):
         spark = registered
